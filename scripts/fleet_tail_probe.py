@@ -7,8 +7,7 @@ on the driver, parsing fanned out across executors — versus the
 single-file driver-side reader's r11 numbers (SCALING.md). Each file
 is a timestamp-shifted copy of the committed fixture plus a sentinel.
 
-Usage: python scripts/fleet_tail_probe.py [n_files] [copies_per_file] [fingerprint_mode]
-(fingerprint_mode: routed [default since r13] or chain)
+Usage: python scripts/fleet_tail_probe.py [n_files] [copies_per_file]
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    mode = sys.argv[3] if len(sys.argv) > 3 else "routed"
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -78,7 +76,7 @@ def main() -> None:
         .load()
         .drop("source_file")
     )
-    classes = stream_classes(events, mode=mode)
+    classes = stream_classes(events)
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
 
@@ -101,7 +99,7 @@ def main() -> None:
         .collect()[0][0]
     )
     print(
-        f"fleet[{mode}]: {n_files} files x{copies} = {total_bytes / 1e6:.1f} MB, "
+        f"fleet: {n_files} files x{copies} = {total_bytes / 1e6:.1f} MB, "
         f"{n} events, drain {wall:.1f} s, {n / wall:.0f} ev/s"
     )
     spark.stop()

@@ -1,5 +1,5 @@
-"""Routed-ingest scale probe (VERDICT r11 #5): events/s of the three
-fingerprint modes on a ×N real-format slow log.
+"""Routed-ingest scale probe (VERDICT r11 #5): events/s of the
+fingerprint paths on a ×N real-format slow log.
 
 `slowlog_classes_routed` was only ever measured on the 983-event
 fixture; this probe scales the REAL log (the committed mysql-format
@@ -7,9 +7,11 @@ fixture, timestamp-shifted per copy so classes keep their shape) to
 ×50 and times the full ingest — parse → fingerprint → digest →
 class aggregation — for each mode:
 
-  chain   : the codegen'd regexp_replace chain, zero Python
-  routed  : split+union — clean rows chain, flagged rows Arrow UDF
-  python  : every row through the Arrow state machine
+  parse   : the product path — the parser's own state-machine digest
+  chain   : the parser's digest replaced by the codegen'd
+            regexp_replace chain
+  routed  : replaced by the masked routing — clean rows chain,
+            flagged rows Arrow UDF
 
 Output: one table row per mode (events, wall, ev/s) plus the flagged
 slice share — the headline ingest number a 100 TB user asks first.
@@ -80,7 +82,10 @@ def main() -> None:
 
     def ingest(mode: str) -> float:
         t0 = time.time()
-        ev = with_fingerprint(parse_slowlog(spark, path), mode=mode).where(
+        ev = parse_slowlog(spark, path)
+        if mode != "parse":
+            ev = with_fingerprint(ev, mode=mode)
+        ev = ev.where(
             (~F.col("admin")) & F.col("query").isNotNull()
         )
         n = (
@@ -112,7 +117,7 @@ def main() -> None:
     )
 
     print(f"{'mode':8s} {'events':>8s} {'wall':>8s} {'ev/s':>9s}  (median of 3 warm)")
-    for mode in ("chain", "routed", "python"):
+    for mode in ("parse", "chain", "routed"):
         ingest(mode)  # warm-up
         walls = []
         n = 0

@@ -1,14 +1,12 @@
-"""Router crossover probe (VERDICT r10 #6): wall time of the three
-fingerprint modes as a function of the corpus' FLAGGED fraction.
+"""Router crossover probe (VERDICT r10 #6): wall time of the chain and
+routed fingerprint modes as a function of the corpus' FLAGGED fraction.
 
 fn_fingerprint_routed's payoff claim ("UDF tax only on the flagged
 slice") is benchmarked only on the real-log fixture (4% flagged);
 this probe sweeps the flagged share over an adversarial mix — 0 / 25 /
 50 / 100% — on a x10-scale synthetic corpus (200k statements) and
-records chain vs routed vs all-UDF wall, so the routing payoff is a
-measured curve like the other frontiers (LSH bands, simhash radius,
-IVF-PQ). The crossover fraction where routed ~ all-UDF is the number a
-deployment uses to decide when routing stops paying.
+records chain vs routed wall, so the routing tax is a measured curve
+like the other frontiers (LSH bands, simhash radius, IVF-PQ).
 
 Protocol: forced full materialization via the noop writer, 1 warmup +
 3 timed reps per cell, warm median reported, persisted-RDD drop
@@ -98,7 +96,7 @@ def main() -> None:
             ).parquet(path)
             df = spark.read.parquet(path)
             cell = {"shape": shape, "n_rows": n, "flagged_frac": frac}
-            for mode in ("chain", "routed", "python"):
+            for mode in ("chain", "routed"):
                 def run():
                     with_fingerprint(df, mode=mode).select(
                         "digest"

@@ -22,8 +22,11 @@ writing Python:
 
 `ingest` = parse → fingerprint → per-(digest, period) stat battery →
 sink (exactly plans/pipeline.ingest_slowlog — the oracle-checked path).
-`digest` = the pt-query-digest-style report: global rollup + top-K
-classes by total query time, printed to stdout.
+`digest` = the pt-query-digest-style report: totals + top-K classes by
+total query time, printed to stdout, from one parse of the log.
+Every slow-log subcommand keys classes by the digest the parser
+computes with the state machine (sources/slowlog.parse_record), so
+`ingest`, `digest`, `stream` and `tail` agree digest for digest.
 `stream` = the same aggregation as an availableNow/continuous
 foreachBatch stream over a growing log directory. The sink is an
 idempotent FULL-STATE overwrite per micro-batch (complete output
@@ -65,13 +68,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="exact buffers per-group values; approx = sketch (100 TB)",
     )
     ing.add_argument(
-        "--fingerprint", default="chain", choices=("chain", "routed", "python"),
-        help="chain = codegen'd regexes (fastest); routed = state-machine"
-        " UDF only on rows flagged by the construct detectors"
-        " (state-machine-exact, small UDF tax); python = state machine"
-        " everywhere",
-    )
-    ing.add_argument(
         "--print-ddl", action="store_true",
         help="print the ClickHouse MergeTree DDL for the class schema and exit",
     )
@@ -82,9 +78,6 @@ def _build_parser() -> argparse.ArgumentParser:
     dig.add_argument(
         "--period", default="minute", choices=("minute", "hour", "day")
     )
-    dig.add_argument(
-        "--fingerprint", default="chain", choices=("chain", "routed", "python")
-    )
 
     st = sub.add_parser("stream", help="streaming ingest of a growing log dir")
     st.add_argument("--log-dir", required=True)
@@ -93,14 +86,6 @@ def _build_parser() -> argparse.ArgumentParser:
     st.add_argument(
         "--follow", action="store_true",
         help="keep running (default: availableNow — drain and exit)",
-    )
-    st.add_argument(
-        "--fingerprint", default="routed", choices=("routed", "chain"),
-        help="routed (default) = state-machine-exact digests via the"
-        " masked single-pass routing (only flagged rows carry payload"
-        " across the Python boundary; no extra source pass since r14);"
-        " chain = pure codegen'd regexes, accepts the documented"
-        " divergences",
     )
 
     dd = sub.add_parser(
@@ -145,11 +130,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="keep running (default: drain what's currently complete and exit)",
     )
     tl.add_argument(
-        "--fingerprint", default="routed", choices=("routed", "chain"),
-        help="routed (default) = state-machine-exact digests via the"
-        " masked single-pass routing; chain = pure codegen'd regexes",
-    )
-    tl.add_argument(
         "--from", dest="start_at", choices=("earliest", "latest"),
         default="earliest",
         help="earliest = include the existing backlog; latest = tail -F "
@@ -165,42 +145,10 @@ def _get_spark():
     return get_session(app_name="slowlog2clickhouse_spark_cli")
 
 
-def _warn_unroutable_constructs(spark, log_path: str) -> None:
-    """Data-driven fingerprint routing check (fn_fingerprint_router's
-    detectors over the REAL log): the ingest pipeline fingerprints via
-    the codegen'd regexp_replace chain, whose divergence regimes are
-    measured by fn_fingerprint_parity. If the log contains any of the
-    ten chain-unsupported constructs, warn with per-construct counts
-    so the user re-runs with full-fidelity fingerprinting. One extra
-    map pass + a 10-number aggregate — never a shuffle."""
+def cmd_ingest(args) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from slowlog2clickhouse_spark.functions.fingerprint import construct_flags
-    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog
-
-    q = parse_slowlog(spark, log_path).where(F.col("query").isNotNull())
-    flags = construct_flags(F.col("query"))
-    row = q.agg(
-        *[F.sum(c.cast("int")).alias(k) for k, c in flags.items()]
-    ).collect()[0]
-    hits = {k: row[k] for k in flags if row[k]}
-    if hits:
-        detail = ", ".join(f"{k}={v}" for k, v in sorted(hits.items()))
-        print(
-            "WARNING: log contains constructs the fingerprint chain "
-            f"diverges on ({detail}); re-run with --fingerprint python "
-            "(cheapest full-fidelity path on a single box — SCALING.md "
-            "r14 crossover: the detector pass alone costs about as "
-            "much as the state machine here) or routed (single-pass "
-            "since r14, UDF payload confined to flagged rows — the "
-            "better choice when Python workers are the constrained "
-            "resource) — see fn_fingerprint_parity for the measured "
-            "per-construct divergence",
-            file=sys.stderr,
-        )
-
-
-def cmd_ingest(args) -> int:
     from slowlog2clickhouse_spark.plans.pipeline import (
         ingest_slowlog,
         sink_classes_parquet,
@@ -210,24 +158,19 @@ def cmd_ingest(args) -> int:
     if not args.print_ddl and not args.out and not args.jdbc_url:
         print("ingest: need --out and/or --jdbc-url (or --print-ddl)", file=sys.stderr)
         return 2
-    spark = _get_spark()
     classes = ingest_slowlog(
-        spark,
-        args.log,
-        period=args.period,
-        percentiles=args.percentiles,
-        fingerprint=args.fingerprint,
+        _get_spark(), args.log, period=args.period, percentiles=args.percentiles
     )
     if args.print_ddl:
         print(clickhouse_ddl(classes, args.table))
         return 0
-    if args.fingerprint == "chain":
-        _warn_unroutable_constructs(spark, args.log)
-    n = None
     if args.out:
-        sink_classes_parquet(classes, args.out)
-        n = spark.read.parquet(args.out).count()
-        print(f"wrote {n} class rows -> {args.out}")
+        # the row count rides on the sink job itself: no re-read
+        written = Observation("sink")
+        sink_classes_parquet(
+            classes.observe(written, F.count(F.lit(1)).alias("rows")), args.out
+        )
+        print(f"wrote {written.get['rows']} class rows -> {args.out}")
     if args.jdbc_url:
         write_jdbc(classes, args.jdbc_url, args.table, driver=args.jdbc_driver)
         print(f"wrote class rows -> {args.jdbc_url} {args.table}")
@@ -235,33 +178,25 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_digest(args) -> int:
-    from slowlog2clickhouse_spark.plans.pipeline import (
-        aggregate_global,
-        ingest_slowlog,
-        top_digests,
-    )
-    from slowlog2clickhouse_spark.sources.slowlog import (
-        parse_slowlog,
-        with_fingerprint,
-    )
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    spark = _get_spark()
-    events = with_fingerprint(parse_slowlog(spark, args.log), mode=args.fingerprint)
-    g = (
-        aggregate_global(events)
-        .agg(
-            {"num_queries": "sum", "m_query_time_sum": "sum"},
-        )
-        .collect()[0]
+    from slowlog2clickhouse_spark.plans.pipeline import ingest_slowlog, top_digests
+
+    # the totals are sums over the class rows, observed in the same job
+    # that ranks them: the log is parsed once
+    totals = Observation("totals")
+    classes = ingest_slowlog(_get_spark(), args.log, period=args.period).observe(
+        totals,
+        F.sum("num_queries").alias("n"),
+        F.sum("m_query_time_sum").alias("qt"),
     )
-    total_n = g["sum(num_queries)"] or 0
-    total_qt = g["sum(m_query_time_sum)"] or 0.0
+    top = top_digests(classes, k=args.top).collect()
+    total_n = totals.get["n"] or 0
+    total_qt = totals.get["qt"] or 0.0
     print(f"# {total_n} queries, {total_qt:.3f}s total query time")
     print("# Rank  Calls      Time(s)   Worst(s)  Fingerprint")
-    classes = ingest_slowlog(
-        spark, args.log, period=args.period, fingerprint=args.fingerprint
-    )
-    for i, r in enumerate(top_digests(classes, k=args.top).collect(), start=1):
+    for i, r in enumerate(top, start=1):
         fp = (r["fingerprint"] or "")[:70]
         # a class whose every event lacked Query_time aggregates to
         # NULL sums/max — print 0.0 instead of crashing the report
@@ -322,7 +257,7 @@ def cmd_stream(args) -> int:
 
     spark = _get_spark()
     events = read_slowlog_stream(spark, args.log_dir)
-    classes = stream_classes(events, mode=args.fingerprint)
+    classes = stream_classes(events)
     writer = _complete_snapshot_writer(classes, args.out, args.checkpoint)
     if args.follow:
         q = writer.start()
@@ -339,6 +274,8 @@ def cmd_tail(args) -> int:
     reader (byte-offset exactly-once; the in-flight torn record is
     held back until mysqld writes the next record header; logrotate
     copytruncate detected via the offset's head-hash incarnation).
+    Events carry the parser's exact digest, the same one `ingest`
+    writes, so `ingest` history + `tail --from latest` join cleanly.
 
     Two modes with DIFFERENT sink semantics, both r11 code-review
     driven:
@@ -380,7 +317,7 @@ def cmd_tail(args) -> int:
         # stream_classes keys by digest — strip the fleet reader's
         # provenance columns (file path + incarnation stamp)
         events = events.drop("source_file", "incarnation")
-    classes = stream_classes(events, mode=args.fingerprint)
+    classes = stream_classes(events)
 
     if args.follow:
         q = (

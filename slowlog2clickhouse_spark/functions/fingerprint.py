@@ -7,22 +7,28 @@ with ``?``, collapse ``IN (...)`` value lists to ``in(?+)`` and
 multi-row ``VALUES`` to ``values(?+)``, collapse whitespace; the class
 id ("digest") is ``upper(substr(md5(fingerprint), 17, 16))``.
 
-Three implementations, fastest-first (SURVEY.md §2 H/K):
+Three implementations, and where each is used:
 
-* :func:`fingerprint_col` — a chain of built-in ``regexp_replace``
-  Columns. JVM-side, whole-stage-codegen'd; THE 100 TB path (no Python
-  boundary). Covers the common grammar; documented edge cases (escaped
-  quotes, nested comments) differ from the UDF.
-* :func:`fingerprint_duckdb` — the same chain rendered as DuckDB SQL,
-  used as the correctness oracle for the Spark chain.
 * :func:`fingerprint_py` — a character state machine with the full
   semantics (escape handling, ``#``/``--``/block comments, hex/float
-  literals); exposed as a pandas UDF in operators/udfs.py. Source of
-  truth in golden tests.
+  literals). THE product path: ``sources.slowlog.parse_record`` calls
+  it (with :func:`digest_py`) on every parsed event, so batch ingest,
+  ``digest``, ``stream`` and ``tail`` all carry the same exact digest.
+  Also the source of truth in golden tests and the pandas UDF in
+  operators/udfs.py.
+* :func:`fingerprint_col` — a chain of built-in ``regexp_replace``
+  Columns, JVM-side and codegen'd. Covers the common grammar;
+  documented edge cases (escaped quotes, nested comments) differ from
+  the state machine. Used by the registry ops whose oracles recompute
+  it, by ``routed_fingerprint`` for unflagged rows, and by
+  ``with_fingerprint`` (modes ``chain`` and ``routed``).
+* :func:`fingerprint_duckdb` — the same chain rendered as DuckDB SQL,
+  the correctness oracle for the Spark chain.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import Column
@@ -231,14 +237,14 @@ def routed_fingerprint(
 
     Cost, MEASURED (r14 crossover, SCALING.md): in streaming/tail
     topology — where the split form's second scan+parse was a 25%
-    drain tax — masked routing now runs at chain speed on clean
-    corpora. In pure-batch topology the residual overhead is the nine
-    detector regexes themselves (~0.4 s / 200k short rows of JVM regex
-    time), which on a single box costs about as much as running the
-    Python state machine on every row — so mode="python" remains the
-    cheapest full-fidelity BATCH path there, and routed is the right
-    shape where Python workers are the constrained resource or the
-    source pass is the expensive part.
+    drain tax — masked routing runs at chain speed on clean corpora.
+    In pure-batch topology the residual overhead is the nine detector
+    regexes themselves (~0.4 s / 200k short rows of JVM regex time),
+    which on a single box costs about as much as running the Python
+    state machine on every row, so the product paths do not route:
+    the parser runs the state machine in its own pass
+    (sources.slowlog.parse_record). This function remains for the
+    fn_fingerprint_routed contract and the ops built on it.
 
     ``fp_fn`` is test-instrumentation only: an alternate per-row
     fingerprint callable (e.g. one that bumps an accumulator) so the
@@ -498,8 +504,6 @@ def fingerprint_py(query: str) -> str:
 
 
 def digest_py(fingerprint: str) -> str:
-    import hashlib
-
     if fingerprint is None:
         return None
     return hashlib.md5(fingerprint.encode("utf-8")).hexdigest()[16:32].upper()

@@ -148,16 +148,28 @@ def _driver_safe(events: DataFrame) -> DataFrame:
     )
 
 
-# the parse-op oracle: the committed golden IR, column-for-column
+# the parse-op oracle: the committed golden IR, column-for-column. The
+# parser fingerprints with the state machine, so its fingerprint/digest
+# are the golden's *_py columns (the golden's own fingerprint/digest
+# hold the chain's values, which the chain-based ops check against)
+_GOLDEN_AS = {
+    "extra_metrics": "extra_metrics_json",
+    "fingerprint": "fingerprint_py",
+    "digest": "digest_py",
+}
+
+
 def _events_sql(gold_expr: str) -> str:
     return (
         "SELECT "
         + ", ".join(
-            f'"{f.name}"'
+            f'{_GOLDEN_AS[f.name]} AS "{f.name}"'
+            if f.name in _GOLDEN_AS
+            else f'"{f.name}"'
             for f in EVENT_SCHEMA.fields
-            if f.name not in ("record_no", "extra_metrics")
+            if f.name != "record_no"
         )
-        + f", extra_metrics_json AS extra_metrics FROM {gold_expr}"
+        + f" FROM {gold_expr}"
     )
 
 
@@ -626,7 +638,7 @@ def qan_new_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse as the class pipeline; first-seen is a |digests|-row
     aggregate that broadcasts back. No raw-event row crosses a second
     shuffle."""
-    from slowlog2clickhouse_spark.plans.pipeline import with_fingerprint
+    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
 
     events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
         (~F.col("admin")) & F.col("query").isNotNull()
@@ -1687,10 +1699,10 @@ def slowlog_classes_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow state machine for flagged rows → class aggregation. The
     oracle classes the same events by the COMMITTED state-machine
     digest (digest_py in the golden IR), so a hash match proves the
-    routed path is state-machine-exact on production-shaped input —
-    the guarantee that lets `ingest --fingerprint routed` claim full
-    reference fidelity while keeping the UDF tax confined to the
-    flagged slice (39/983 events on this fixture).
+    routed path is state-machine-exact on production-shaped input,
+    with the UDF tax confined to the flagged slice (39/983 events on
+    this fixture). The product paths do not route: the parser
+    fingerprints every event with the state machine itself.
 
     Scale: the chain ingest plus masked single-pass routing on ten
     codegen'd boolean detectors (NOT when()/otherwise() in the VALUE

@@ -6,8 +6,8 @@ metrics}.go [R:H], reconstructed): for each parsed event, fingerprint
 finalize cnt/sum/min/max/avg/med/p95 (+ example query of the worst
 execution) at each period boundary, flush wide rows to ClickHouse.
 
-Here the whole thing is ONE declarative plan: parse (sources/slowlog),
-fingerprint (codegen'd regex chain), tumbling-window groupBy with the
+Here the whole thing is ONE declarative plan: parse + fingerprint
+(sources/slowlog, one Python pass), tumbling-window groupBy with the
 full stat battery, `max_by` for the example, partitioned parquet sink.
 Catalyst gives partial+final aggregation automatically — shuffle
 volume is |classes × periods|, not |events| (the same pre-aggregation
@@ -33,7 +33,6 @@ from slowlog2clickhouse_spark.sources.slowlog import (
     NUMBER_METRICS,
     TIME_METRICS,
     parse_slowlog,
-    with_fingerprint,
 )
 
 # fixture tests exercise these families (FIXTURES.md §3); the full
@@ -178,16 +177,11 @@ def ingest_slowlog(
     metrics=DEFAULT_STAT_METRICS,
     percentiles: str = "exact",
     example_tiebreak: str = "record_no",
-    fingerprint: str = "chain",
 ) -> DataFrame:
-    """Full batch pipeline: log file(s) → query-class rows.
-    ``fingerprint`` picks the normalization path: "chain" (codegen'd,
-    default), "routed" (chain + state-machine UDF only on flagged
-    rows — what the CLI warning tells a user to re-run with), or
-    "python" (state machine everywhere)."""
-    events = with_fingerprint(parse_slowlog(spark, path), mode=fingerprint)
+    """Full batch pipeline: log file(s) → query-class rows, keyed by
+    the exact digest the parser attached to each event."""
     return aggregate_classes(
-        events,
+        parse_slowlog(spark, path),
         period=period,
         metrics=metrics,
         percentiles=percentiles,

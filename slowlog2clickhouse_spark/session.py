@@ -2,7 +2,8 @@
 
 Defaults follow SURVEY.md §7 M0: local master, UTC session timezone
 (the DuckDB oracle is UTC), AQE enabled, shuffle partitions sized to
-local cores (32 — at cluster scale this is overridden per-job), and
+local cores (``local_cpus``: ``SPARK_GRAFT_CPUS`` or the host's cores;
+at cluster scale this is overridden per-job), and
 ``spark.sql.legacy.parquet.nanosAsLong=true`` so the driver's
 ``events.parquet`` (parquet timestamp[ns]) is readable; ``io.py``
 re-materializes the column as a microsecond timestamp.
@@ -20,15 +21,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for ``local[N]`` and the shuffle-partition count:
+    ``SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on — never more threads than the host has."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def get_session(
     app_name: str = "slowlog2clickhouse_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -79,8 +88,7 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
     # the 200-partition default — at our test SFs that is 200 near-empty
     # tasks (and 200 Python workers for every applyInPandas); size to
     # local cores and let AQE coalesce upward jobs re-split
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", str(local_cpus()))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -11,7 +11,12 @@ goroutine and emits events over a channel, we
    record boundaries so the scan parallelizes cleanly at 100 TB), then
 2. parse each record to a typed row inside an Arrow-batched
    ``mapInPandas`` (regex-bound Python, ~one pass per record; no
-   driver-side loops, no RDDs).
+   driver-side loops, no RDDs). The same pass fingerprints the
+   statement with the state machine (``fingerprint_py``) and attaches
+   its ``fingerprint`` and ``digest``, as the reference's event loop
+   does, so every reader built on ``parse_record`` (this batch source,
+   the ``stream`` file source, the UDTF and the ``slowlog`` /
+   ``slowlog_tail_multi`` data sources) carries the same exact class.
 
 Output schema follows FIXTURES.md §2 (the reference's ``log.Event``
 widened to typed nullable columns, with unrecognized ``# Key: value``
@@ -29,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from slowlog2clickhouse_spark.functions.fingerprint import digest_py, fingerprint_py
 
 RECORD_DELIM = "\n# Time: "
 
@@ -93,6 +100,12 @@ EVENT_SCHEMA = T.StructType(
     + [T.StructField(m, T.LongType()) for m in NUMBER_METRICS]
     + [T.StructField(m, T.BooleanType()) for m in BOOL_METRICS]
     + [T.StructField("extra_metrics", T.MapType(T.StringType(), T.StringType()))]
+    # the statement's exact class, computed in the parse pass (the
+    # reference's event loop: fp := query.Fingerprint(e.Query))
+    + [
+        T.StructField("fingerprint", T.StringType()),
+        T.StructField("digest", T.StringType()),
+    ]
 )
 
 _USER_HOST_RE = re.compile(r"^(\S+?)\[(\S*?)\]\s*@\s*(\S*)\s*\[(\S*)\]")
@@ -173,7 +186,9 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
     `# User@Host:` extracts user/host; `# Key: val` pairs dispatch into
     time/number/bool metrics by declared family (unknown keys → extra);
     `SET timestamp=` overrides ts; `use db` sets db; `# administrator
-    command:` marks admin; remaining lines accumulate as the statement.
+    command:` marks admin; remaining lines accumulate as the statement,
+    which is then fingerprinted (``fingerprint``/``digest``; NULL for a
+    record without a statement).
 
     Server preamble lines (version banner / `Tcp port:` / column
     header) are skipped wherever they appear — at file start AND after
@@ -280,6 +295,8 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
     if query_lines:
         ev["query"] = "\n".join(query_lines).strip().rstrip(";")
     ev["extra_metrics"] = extra or None
+    ev["fingerprint"] = fingerprint_py(ev["query"])
+    ev["digest"] = digest_py(ev["fingerprint"])
     return ev
 
 
@@ -329,10 +346,15 @@ def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
 
 
 def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
-    """Attach fingerprint + digest.
+    """Re-derive fingerprint + digest with a JVM-side path, replacing
+    the exact values the parser already attached.
 
-    mode="chain"  — the codegen'd regexp_replace chain (the 100 TB
-                    path; default, unchanged behavior).
+    Product paths never call this: ``parse_record`` fingerprints every
+    event with the state machine. It exists for the registry ops whose
+    DuckDB oracles recompute the chain, and for measuring the chain.
+
+    mode="chain"  — the codegen'd regexp_replace chain (what
+                    ``fingerprint_duckdb`` mirrors; default).
     mode="routed" — per-row routing (the fn_fingerprint_routed
                     contract): rows with no chain-divergence construct
                     flag take the chain, flagged rows take the Arrow
@@ -344,33 +366,17 @@ def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
                     to NULL for clean rows, so only flagged payloads
                     cross the Arrow boundary and the source is scanned
                     ONCE — see routed_fingerprint.
-    mode="python" — every row through the Arrow state machine (the
-                    full-fidelity reference semantics, maximum cost).
     """
     from slowlog2clickhouse_spark.functions.fingerprint import (
         digest_col,
         fingerprint_col,
-        fingerprint_py,
         routed_fingerprint,
     )
 
     if mode == "chain":
-        fp = fingerprint_col(F.col("query"))
-    elif mode == "python":
-        import pandas as pd
-
-        @F.pandas_udf("string")
-        def _fp_vec(s: pd.Series) -> pd.Series:
-            return s.map(lambda q: fingerprint_py(q) if q is not None else None)
-
-        fp = _fp_vec(F.col("query"))
+        events = events.withColumn("fingerprint", fingerprint_col(F.col("query")))
     elif mode == "routed":
-        # masked single-pass, NOT when()/otherwise() — see routed_fingerprint
-        return routed_fingerprint(events, "query", "fingerprint").withColumn(
-            "digest", digest_col(F.col("fingerprint"))
-        )
+        events = routed_fingerprint(events, "query", "fingerprint")
     else:
         raise ValueError(f"unknown fingerprint mode: {mode!r}")
-    return events.withColumn("fingerprint", fp).withColumn(
-        "digest", digest_col(F.col("fingerprint"))
-    )
+    return events.withColumn("digest", digest_col(F.col("fingerprint")))

@@ -131,40 +131,19 @@ def read_slowlog_stream(
     return raw.mapInPandas(chunk, EVENT_SCHEMA)
 
 
-def stream_classes(events: DataFrame, mode: str = "routed") -> DataFrame:
+def stream_classes(events: DataFrame) -> DataFrame:
     """Watermarked 1-minute class aggregation on the parsed stream
     (compact stat set; the full battery is the batch pipeline's).
 
-    Fingerprinting is ROUTED by default (r12 VERDICT #2): the same
-    masked single-pass routing as the batch ingest — clean rows
-    through the codegen'd chain, construct-flagged rows (doubled
-    quotes, multi-line comments, non-ASCII, ...) through the Arrow
-    state machine — so streamed class digests are state-machine-exact,
-    not chain-approximate. Since r14 the routing is ONE stateless
-    projection (UDF input masked to NULL on clean rows — see
-    routed_fingerprint), trivially micro-batch safe: no split/union
-    topology exists to re-align, and the all-clean micro-batch pays
-    no second source pass (the r13 split+union form's measured 25%
-    drain tax). Pinned under live streaming execution by
-    tests/test_streaming.py::
+    Keys on the ``digest`` the parser attached to each event
+    (``parse_record`` fingerprints with the state machine), so streamed
+    classes carry the same exact digests as batch ``ingest`` and need
+    no fingerprint projection of their own. Pinned under live
+    streaming execution by tests/test_streaming.py::
     test_stream_classes_routed_inside_microbatch_equals_routed_batch,
-    which drives the adversarial corpus through THIS function as the
-    running streaming query. ``mode="chain"`` keeps the pure codegen
-    path for pipelines that accept chain-approximate digests."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        fingerprint_col,
-        routed_fingerprint,
-    )
-
-    if mode not in ("routed", "chain"):
-        raise ValueError(f"stream_classes mode must be 'routed' or 'chain', got {mode!r}")
+    and against ``ingest``/``tail`` by tests/test_cli.py::
+    test_cli_paths_agree_on_exact_digests."""
     ev = events.where(~F.col("admin") & F.col("query").isNotNull())
-    if mode == "routed":
-        ev = routed_fingerprint(ev, "query", "fingerprint")
-    else:
-        ev = ev.withColumn("fingerprint", fingerprint_col(F.col("query")))
-    ev = ev.withColumn("digest", digest_col(F.col("fingerprint")))
     return (
         ev.withWatermark("ts", "5 minutes")
         .groupBy(F.window("ts", "1 minute").alias("w"), F.col("digest"))

@@ -133,52 +133,82 @@ def test_cli_curate_report(spark, sf_dir, tmp_path, capsys):
     assert "funnel" in text
 
 
-def test_cli_ingest_warns_on_unroutable_constructs(spark, tmp_path, capsys):
-    """The ingest path runs fn_fingerprint_router's detectors on the
-    real log: the fixture contains comment-apostrophe statements, so
-    the chain-divergence warning must appear with per-construct
-    counts; a clean log must stay silent."""
-    out = str(tmp_path / "classes")
-    rc = main(["ingest", "--log", FIXTURE_LOG, "--out", out])
-    assert rc == 0
-    err = capsys.readouterr().err
-    assert "WARNING" in err and "comment_apostrophe" in err
+# statements that trip the chain-divergence construct detectors, one
+# per family, beside clean ones
+_CHAIN_DIVERGENT = (
+    "SELECT id FROM t WHERE name = 'it''s' AND id = 5",  # doubled quote
+    "SELECT id FROM t WHERE name = 'a\\'b' AND id = 6",  # backslash escape
+    "SELECT /* line one\nline two */ id FROM t WHERE id = 3",  # multi-line comment
+    "SELECT id /* don't */ FROM t WHERE name = 'x'",  # comment apostrophe
+    "SELECT 表3 FROM 社員 WHERE id = 8",  # non-ASCII
+)
+_CLEAN = (
+    "SELECT c1, c2 FROM orders WHERE o_id = {i}",
+    "UPDATE stock SET qty = qty - {i} WHERE sku = 'k{i}'",
+    "SELECT * FROM users WHERE id IN ({i}, {j}, 3)",
+    "INSERT INTO log (a, b) VALUES ({i}, 'v{i}'), ({j}, 'w')",
+)
 
-    clean = tmp_path / "clean.log"
-    clean.write_text(
-        "# Time: 2024-01-01T00:00:01.000000Z\n"
-        "# User@Host: u[u] @ h []  Id: 1\n"
-        "# Query_time: 0.01  Lock_time: 0.0  Rows_sent: 1  Rows_examined: 1\n"
-        "SET timestamp=1704067201;\n"
-        "SELECT id FROM t WHERE id = 7;\n"
+
+def test_cli_paths_agree_on_exact_digests(spark, tmp_path):
+    """One log through CLI `ingest`, `stream`, `tail` on the file and
+    `tail` on its directory (the fleet reader): every path yields the
+    same (digest, num_queries) multiset, and each digest is the state
+    machine's — digest_py(fingerprint_py(query)). So `ingest` history
+    followed by `tail --from latest` never splits a query class."""
+    from collections import Counter
+
+    from slowlog2clickhouse_spark.functions.fingerprint import (
+        digest_py,
+        fingerprint_chain_py,
+        fingerprint_py,
     )
-    out2 = str(tmp_path / "classes2")
-    rc = main(["ingest", "--log", str(clean), "--out", out2])
-    assert rc == 0
-    assert "WARNING" not in capsys.readouterr().err
 
+    # teeth: a chain-keyed path would split or merge these classes
+    assert sum(fingerprint_chain_py(q) != fingerprint_py(q) for q in _CHAIN_DIVERGENT) >= 4
+    queries = [t.format(i=i, j=i + 1) for i in range(6) for t in _CLEAN]
+    queries += [q for q in _CHAIN_DIVERGENT for _ in range(2)]
+    logs = tmp_path / "logs"
+    os.makedirs(logs)
+    log = logs / "slow.log"
+    with open(log, "w", encoding="utf-8") as f:
+        for n, q in enumerate(queries):
+            f.write(
+                f"# Time: 2024-01-01T00:{n // 60:02d}:{n % 60:02d}.000000Z\n"
+                "# User@Host: u[u] @ h []  Id: 1\n"
+                "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
+                f"{q};\n"
+            )
+        # header-only sentinel: flushes the last record out of the tail
+        # readers' torn-record hold-back; it has no statement, no class
+        f.write(
+            "# Time: 2030-01-01T00:00:00.000000Z\n"
+            "# Query_time: 0.000001  Lock_time: 0.000000 "
+            "Rows_sent: 0  Rows_examined: 0\n"
+        )
 
-def test_cli_ingest_routed_fingerprint_no_warning_and_exact(spark, tmp_path):
-    """--fingerprint routed: no chain-divergence warning (the routed
-    path IS the remedy), and the class digests equal the full
-    state-machine ingest's — routing changes cost, never answers."""
-    out_r = str(tmp_path / "routed")
-    rc = main(["ingest", "--log", FIXTURE_LOG, "--out", out_r,
-               "--fingerprint", "routed"])
-    assert rc == 0
-    out_p = str(tmp_path / "python")
-    rc = main(["ingest", "--log", FIXTURE_LOG, "--out", out_p,
-               "--fingerprint", "python"])
-    assert rc == 0
-    routed = spark.read.parquet(out_r)
-    full = spark.read.parquet(out_p)
-    agg = lambda df: {  # noqa: E731
-        (r["digest"], r["num_queries"])
-        for r in df.groupBy("digest")
-        .agg(F.sum("num_queries").alias("num_queries"))
-        .collect()
+    runs = {
+        "ingest": ["ingest", "--log", str(log)],
+        "stream": ["stream", "--log-dir", str(logs)],
+        "tail": ["tail", "--log", str(log)],
+        "tail_fleet": ["tail", "--log", str(logs)],
     }
-    assert agg(routed) == agg(full)
+    want = Counter(digest_py(fingerprint_py(q)) for q in queries)
+    for name, argv in runs.items():
+        out = str(tmp_path / f"out_{name}")
+        if name != "ingest":
+            argv += ["--checkpoint", str(tmp_path / f"ckpt_{name}")]
+        assert main([*argv, "--out", out]) == 0
+        got = Counter(
+            {
+                r["digest"]: r["n"]
+                for r in spark.read.parquet(out)
+                .groupBy("digest")
+                .agg(F.sum("num_queries").alias("n"))
+                .collect()
+            }
+        )
+        assert got == want, name
 
 
 @pytest.mark.slow  # r17 driver-budget deselection (VERDICT r16 #6); in the full suite via scripts/ptest.py

@@ -315,6 +315,53 @@ def test_llm_curation_funnel_exchange_budget(plans):
     assert _n_nodes(plans["llm_curation_funnel"], "Exchange") <= 16
 
 
+def _executed_plan(df) -> str:
+    """The final physical plan of an already-executed DataFrame (the
+    AQE initial plan, printed below it, is cut off)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_ingest_slowlog_fingerprints_in_the_parse_pass(spark):
+    """The parser fingerprints each event itself: the executed ingest
+    plan holds ONE Python stage (the mapInPandas parser) and no
+    fingerprint UDF stage beside it."""
+    from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
+    from slowlog2clickhouse_spark.plans.pipeline import ingest_slowlog
+
+    df = ingest_slowlog(spark, FIXTURE_LOG)
+    df.collect()
+    p = _executed_plan(df)
+    assert p.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
+def test_cli_digest_parses_the_log_once(spark, monkeypatch, capsys):
+    """`digest` prints totals and the top-K from ONE job over ONE
+    parse: its totals are observed on the class rows it ranks."""
+    from slowlog2clickhouse_spark.__main__ import main
+    from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
+    from slowlog2clickhouse_spark.plans import pipeline
+
+    parses, ranked = [], []
+    parse, top = pipeline.parse_slowlog, pipeline.top_digests
+
+    def counting_parse(*a, **k):
+        parses.append(parse(*a, **k))
+        return parses[-1]
+
+    def keeping_top(*a, **k):
+        ranked.append(top(*a, **k))
+        return ranked[-1]
+
+    monkeypatch.setattr(pipeline, "parse_slowlog", counting_parse)
+    monkeypatch.setattr(pipeline, "top_digests", keeping_top)
+    assert main(["digest", "--log", FIXTURE_LOG, "--top", "3"]) == 0
+    assert capsys.readouterr().out.startswith("# 983 queries")
+    assert len(parses) == 1 and len(ranked) == 1
+    assert _executed_plan(ranked[0]).count("MapInPandas") == 1
+
+
 def test_parquet_scans_prune_columns(plans):
     """Every lazy op that scans lineitem must NOT read all 11 columns
     unless it genuinely projects them (spot-check: ops over lineitem
@@ -337,7 +384,6 @@ def test_parquet_scans_prune_columns(plans):
 # every entry is a BOUNDED collect: model/codebook training output,
 # 1-row stats, fixture/CLI output — never proportional to table rows
 DRIVER_COLLECT_ALLOWLIST = {
-    "slowlog2clickhouse_spark/__main__.py::_warn_unroutable_constructs",  # CLI: bounded sample of unroutable statements
     "slowlog2clickhouse_spark/__main__.py::cmd_curate",  # CLI table output (console deliverable)
     "slowlog2clickhouse_spark/__main__.py::cmd_digest",  # CLI table output (console deliverable)
     "slowlog2clickhouse_spark/operators/dedup.py::dedup_cluster_incremental",  # 1-row equality-check hash (state == recompute)

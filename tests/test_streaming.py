@@ -2199,17 +2199,17 @@ def test_tail_routed_streamed_classes_equal_batch_on_adversarial_corpus(
 def test_stream_classes_routed_inside_microbatch_equals_routed_batch(
     spark, tmp_path
 ):
-    """ADVICE r13 #3: the routed fingerprint must be exercised WHERE
+    """ADVICE r13 #3: the exact fingerprint must be exercised WHERE
     the claim is made — executing INSIDE a live micro-batch, not
     applied after-the-fact to a memory-sink table. The adversarial
-    corpus is drained through stream_classes(mode='routed') as the
-    RUNNING streaming query (tail source → masked-routing projection →
+    corpus is drained through stream_classes as the RUNNING streaming
+    query (tail source with the parser's state-machine digest →
     watermarked window agg → memory sink) across two micro-batches
     (grow-drain dance), and the emitted state must row-equal the same
     stream_classes topology executed in batch over the same log.
-    Teeth: chain-mode batch classes DIFFER on digests, so the routed
-    (state-machine) branch demonstrably ran under streaming execution
-    on the flagged slice."""
+    Teeth: chain-fingerprinted batch classes DIFFER on digests, so the
+    state machine demonstrably ran under streaming execution on the
+    flagged slice."""
     import re
 
     import pandas as pd
@@ -2217,6 +2217,7 @@ def test_stream_classes_routed_inside_microbatch_equals_routed_batch(
     from slowlog2clickhouse_spark.functions.fingerprint import (
         construct_flags_py,
     )
+    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
     from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes
 
@@ -2254,8 +2255,7 @@ def test_stream_classes_routed_inside_microbatch_equals_routed_batch(
     name = "adv_stream_classes_routed"
     q = (
         stream_classes(
-            spark.readStream.format("slowlog").option("path", src).load(),
-            mode="routed",
+            spark.readStream.format("slowlog").option("path", src).load()
         )
         .writeStream.format("memory")
         .queryName(name)
@@ -2282,10 +2282,10 @@ def test_stream_classes_routed_inside_microbatch_equals_routed_batch(
     ]
     streamed = _rows(spark.table(name), cols)
     batch_events = spark.read.format("slowlog").load(src)
-    batch = _rows(stream_classes(batch_events, mode="routed"), cols)
-    assert streamed == batch  # routed branch exact under streaming exec
+    batch = _rows(stream_classes(batch_events), cols)
+    assert streamed == batch  # exact digests under streaming exec
     assert sum(r[2] for r in streamed) == len(qs)  # no loss, no dup
-    chain = _rows(stream_classes(batch_events, mode="chain"), cols)
+    chain = _rows(stream_classes(with_fingerprint(batch_events, "chain")), cols)
     assert {r[1] for r in chain} != {r[1] for r in streamed}
 
 
