@@ -3,8 +3,9 @@ the partitioned slowlog_tail_multi reader (availableNow batch through
 the same class-agg topology as `tail --log <dir>`).
 
 Measures events/s for the fleet shape — per-file byte offsets planned
-on the driver, parsing fanned out across executors — versus the
-single-file driver-side reader's r11 numbers (SCALING.md). Each file
+on the driver, parsing fanned out across executors — versus the r11
+numbers of the former driver-side single-file reader (SCALING.md),
+since removed: `tail --log FILE` now runs on this reader. Each file
 is a timestamp-shifted copy of the committed fixture plus a sentinel.
 
 Usage: python scripts/fleet_tail_probe.py [n_files] [copies_per_file]

@@ -111,17 +111,15 @@ def _build_parser() -> argparse.ArgumentParser:
 
     tl = sub.add_parser(
         "tail",
-        help="follow growing slow-log file(s): one FILE tails on the "
-        "driver; a DIRECTORY or glob tails the whole fleet with "
-        "per-file offsets and executor-side parsing (use `stream` "
-        "for a directory of finished/rotated segments)",
+        help="follow growing slow-log file(s) with per-file offsets "
+        "and executor-side parsing (use `stream` for a directory of "
+        "finished/rotated segments)",
     )
     tl.add_argument(
         "--log",
         required=True,
         help="the growing slow-log FILE, or a directory/glob of many "
-        "(one per mysqld) — directories and globs select the "
-        "partitioned fleet reader",
+        "(one per mysqld)",
     )
     tl.add_argument("--out", required=True, help="output parquet directory")
     tl.add_argument("--checkpoint", required=True)
@@ -270,10 +268,12 @@ def cmd_stream(args) -> int:
 
 
 def cmd_tail(args) -> int:
-    """Tail the LIVE slow-log file via the Python Data Source stream
-    reader (byte-offset exactly-once; the in-flight torn record is
-    held back until mysqld writes the next record header; logrotate
-    copytruncate detected via the offset's head-hash incarnation).
+    """Tail the LIVE slow-log file(s) via the ``slowlog_tail_multi``
+    Python Data Source stream reader — one file, a directory or a
+    glob (per-file byte offsets, exactly-once; the in-flight torn
+    record is held back until mysqld writes the next record header;
+    rotation detected via the offset's head-hash + inode incarnation
+    stamp).
     Events carry the parser's exact digest, the same one `ingest`
     writes, so `ingest` history + `tail --from latest` join cleanly.
 
@@ -296,27 +296,20 @@ def cmd_tail(args) -> int:
       windows — closed ones were already appended — and the drain
       guard refuses to overwrite the append sink's history; union
       the two outputs for the complete picture)."""
-    import os as _os
-
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
     from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes
 
     spark = _get_spark()
     register(spark)
-    # one FILE -> driver-side single-file tail; a directory or glob ->
-    # the partitioned fleet reader (per-file offsets, executor parse)
-    fleet = _os.path.isdir(args.log) or any(c in args.log for c in "*?[")
-    fmt = "slowlog_tail_multi" if fleet else "slowlog"
+    # stream_classes keys by digest — strip the reader's provenance
+    # columns (file path + incarnation stamp)
     events = (
-        spark.readStream.format(fmt)
+        spark.readStream.format("slowlog_tail_multi")
         .option("path", args.log)
         .option("startAt", args.start_at)
         .load()
+        .drop("source_file", "incarnation")
     )
-    if fleet:
-        # stream_classes keys by digest — strip the fleet reader's
-        # provenance columns (file path + incarnation stamp)
-        events = events.drop("source_file", "incarnation")
     classes = stream_classes(events)
 
     if args.follow:

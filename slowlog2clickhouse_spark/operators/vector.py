@@ -861,13 +861,20 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # list aggregate instead of a row_number window — the groupBy rides
     # the same Exchange the window needed but drops the full partition
     # sort (the window sorted EVERY candidate per group to keep 3).
-    # Ordering equivalence with the old `cos_sim DESC, cand_id ASC`
-    # window: struct(-cos_sim, cand_id) sorted ascending — double
-    # negation exactly reverses the comparator (incl. -0.0/0.0, which
-    # negation swaps), and cand_id asc is the identical tie-break.
+    # Ordering vs the old `cos_sim DESC, cand_id ASC` window (and the
+    # DuckDB oracle's, whose DESC also puts NULLs last):
+    # struct(cos_sim IS NULL, -cos_sim, cand_id) sorted ascending.
+    # The leading flag ranks a NULL cos_sim (a NULL embedding element)
+    # last; without it the struct's NULL field would sort first.
+    # Negation reverses the comparator for every non-NaN value
+    # (incl. -0.0/0.0, which negation swaps). NaN is NOT equivalent:
+    # -NaN is NaN, the largest double, so a NaN cos_sim (a zero-norm
+    # embedding) ranks last here but first in the DESC window.
     def _t3(cond=None):
         s = F.struct(
-            (-F.col("cos_sim")).alias("nc"), F.col("cand_id").alias("cand_id")
+            F.col("cos_sim").isNull().alias("null_sim"),
+            (-F.col("cos_sim")).alias("nc"),
+            F.col("cand_id").alias("cand_id"),
         )
         # collect_list drops NULLs, so when(cond, s) collects the
         # cond-subset in the SAME aggregate pass — no second scan of

@@ -18,11 +18,10 @@ parser generator-style (no whole-corpus materialization). For
 multi-GB single files the lineSep reader (which byte-splits within a
 file) is the better tool — documented trade, same output schema.
 
-Tail readers (streaming): ONE rotation-handling implementation.
-Both the single-file tail (SlowlogTailStreamReader) and the fleet tail
-(SlowlogMultiTailStreamReader) plan and read through the same three
-module-level primitives (r12 VERDICT #6 — the r12 review rounds fixed
-near-identical bugs in two parallel implementations; now there is one):
+Tail reader (streaming): ``slowlog_tail_multi``
+(SlowlogMultiTailStreamReader) follows one growing file, a directory
+or a glob; a plain file path globs to itself. It plans and reads
+through three module-level primitives:
 
   * ``_stamp_file``       — a file's offset entry {pos, head, head_n,
                             ino}: last complete-record boundary + the
@@ -39,18 +38,6 @@ near-identical bugs in two parallel implementations; now there is one):
                             planned length, apply the same-incarnation
                             guard, then best-effort salvage of the
                             start incarnation's unread tail.
-
-The two reader classes remain as thin shells because their OFFSET
-CONTRACTS genuinely differ and cannot be unified without breaking one:
-the single-file tail carries a running record ordinal (``rno``) and a
-``gen`` counter in its offset — stateful by design, so ``record_no``
-is a never-resetting sequence over the whole tail — while the fleet
-reader is STATELESS (``latestOffset()`` receives no start offset after
-a committed restart, so nothing cross-batch can live in its offsets)
-and ``record_no`` is therefore the record's byte offset within its
-file incarnation. A fleet-of-1 cannot express the single reader's
-ordinal contract; the single reader cannot express per-file fan-out.
-Rotation handling, the part that was duplicated, is shared.
 """
 
 from __future__ import annotations
@@ -65,7 +52,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -128,15 +114,13 @@ def _read_verified_tail(
     head_n: int,
     pos: int,
     ino: int = 0,
-    limit: int | None = None,
 ) -> bytes:
-    """Read ``path[pos:pos+limit]`` (to EOF when ``limit`` is None)
-    iff the file's identity matches the recorded incarnation stamp —
-    the salvage/replay primitive for FINAL files (a rotated sibling
-    never grows, so a short read is the file's true end, not a torn
-    range; planned live ranges go through :func:`_verified_range`,
-    which enforces the exact planned length). Identity holds when
-    either leg matches:
+    """Read ``path[pos:]`` iff the file's identity matches the recorded
+    incarnation stamp — the salvage primitive for FINAL files (a
+    rotated sibling never grows, so a short read is the file's true
+    end, not a torn range; planned live ranges go through
+    :func:`_verified_range`, which enforces the exact planned length).
+    Identity holds when either leg matches:
 
     * md5 of the first ``head_n`` bytes equals ``head`` (the rotated
       COPY of our incarnation — copytruncate gives it a new inode but
@@ -178,7 +162,7 @@ def _read_verified_tail(
             if not ok:
                 return b""
             fh.seek(pos)
-            buf = fh.read() if limit is None else fh.read(limit)
+            buf = fh.read()
             if prefix:
                 fh.seek(0)
                 if fh.read(len(prefix)) != prefix:
@@ -290,7 +274,7 @@ def _verified_range(
 
 
 def _plan_file_range(path: str, s: dict, e: dict) -> dict | None:
-    """THE rotation decision — both tail readers plan through this.
+    """THE rotation decision — the tail reader plans through this.
 
     Given one file's committed start entry ``s`` and freshly stamped
     end entry ``e`` (each {pos, head, head_n, ino}), decide whether the
@@ -358,7 +342,7 @@ def _plan_file_range(path: str, s: dict, e: dict) -> dict | None:
 
 def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
     """Execute one planned range dict (from :func:`_plan_file_range`)
-    — the ONE read implementation behind both tail readers.
+    — the ONE read implementation behind the tail reader.
 
     Locates the END incarnation first: the live path (verified by head
     hash alone — copytruncate keeps the inode while replacing content,
@@ -454,8 +438,7 @@ def _stamp_file(path: str, head_bytes: int = 64) -> dict | None:
     byte after the last complete-record boundary, head/head_n/ino the
     incarnation stamp. The WHOLE body is guarded: a rotation or
     removal between the stat and the opens returns None instead of
-    crashing the caller (both readers share this — the guard can't
-    drift between them)."""
+    crashing the caller."""
     try:
         size = os.path.getsize(path)
         b = _last_boundary(path, size)
@@ -538,189 +521,6 @@ def _stamp_file_cached(path: str, cache: dict, head_bytes: int = 64) -> dict | N
     return None
 
 
-class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
-    """Tail ONE growing slow-log file — the reference's deployment
-    shape (a PMM agent follows the live file; rotation is a separate
-    concern handled by the directory file-stream source). Spark's
-    built-in file stream never re-reads a file that grew, so this is a
-    genuine capability gap the Python Data Source API closes.
-
-    Offsets are byte positions of COMPLETE-record boundaries:
-    ``read(start)`` consumes from ``start.pos`` up to (not including)
-    the LAST ``\n# Time:`` marker currently in the file — the bytes
-    after it are an in-flight record that mysqld may still be writing
-    (the torn-tail hazard every tailer has) and are held back until a
-    later record's header terminates them. Restart/retry safety comes
-    from the offset contract itself: Spark checkpoints {pos, rno}, and
-    ``readBetweenOffsets`` re-reads the exact byte range
-    deterministically on replay (exactly-once into an idempotent
-    sink). ``rno`` carries the record ordinal across batches so
-    record_no stays stable and deterministic — a per-batch enumerate
-    would restart at 0 every micro-batch.
-
-    Rotation handling is the SHARED implementation (module header):
-    this class only adds the ordinal/gen bookkeeping its stateful
-    offset contract carries — the reason it exists alongside the
-    stateless fleet reader.
-
-    Scale note: a SimpleDataSourceStreamReader reads on the DRIVER —
-    correct for the single-file tail (the reference's tailer is
-    single-node too, and one mysqld writes one slow log); fan-out
-    across many hosts' logs is the fleet reader's job."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("slowlog tail stream requires a path")
-        self.start_at = str(options.get("startat", "earliest")).lower()
-        if self.start_at not in ("earliest", "latest"):
-            raise ValueError(
-                f"startAt must be 'earliest' or 'latest', got {self.start_at!r}"
-            )
-        # stat-unchanged fast path (see _stamp_file_cached): idle polls
-        # cost one os.stat instead of stat+open+hash+tail-block-scan
-        self._stat_cache: dict = {}
-
-    _HEAD_BYTES = 64
-
-    def initialOffset(self) -> dict:
-        zero = {"pos": 0, "rno": 0, "head": "", "head_n": 0, "gen": 0, "ino": 0}
-        if self.start_at != "latest":
-            return zero
-        # tail-from-now: skip every record COMPLETE at start (their
-        # bulk load is the batch byte-splitting reader's job). Exact
-        # semantics: pos starts at the last complete-record boundary,
-        # so the single record still IN FLIGHT at start — including a
-        # file whose only record has no terminating successor yet —
-        # is emitted once a later header terminates it. That is the
-        # one record per file that can overlap a prior `ingest` pass
-        # (which may or may not have caught its final form); pair the
-        # recipe with an idempotent sink or accept <=1 boundary
-        # record per file. The CACHED stamp path guards against both
-        # a vanished file AND a rotation racing the scan (the torn
-        # old-pos/new-head weld, r13 third review) — either way the
-        # start falls back to earliest.
-        st = _stamp_file_cached(self.path, self._stat_cache, self._HEAD_BYTES)
-        if st is None:
-            return zero
-        return {"rno": 0, "gen": 0, **st}
-
-    def _parse(self, chunk: bytes, rno0: int):
-        if not chunk:
-            return iter([]), 0
-        text = chunk.decode("utf-8", errors="replace")
-        rows = []
-        n = 0
-        for rec in _records(text):
-            ev = parse_record(rec, rno0 + n)
-            n += 1
-            if ev is not None:
-                rows.append(tuple(ev[name] for name in _FIELDS))
-        return iter(rows), n
-
-    def read(self, start: dict):
-        import itertools
-
-        rno0 = int(start["rno"])
-        e = _stamp_file_cached(self.path, self._stat_cache, self._HEAD_BYTES)
-        if e is None:
-            return iter([]), start
-        plan = _plan_file_range(self.path, start, e)
-        if plan is None:
-            return iter([]), start
-        sib_buf, _sb, live_buf, _lb, same = _read_planned_range(plan)
-        if not sib_buf and not live_buf:
-            # nothing verifiable to emit (rotation raced every leg, or
-            # a salvage-only plan whose sibling is gone): leave the
-            # offset AT START and retry next trigger — advancing it
-            # would silently commit a range that was never read
-            return iter([]), start
-        # gen increments on a GENUINE reset so a replay of this batch
-        # knows its live bytes start at 0, not start.pos; a spurious
-        # reset neutralized by the same-incarnation guard is a plain
-        # append batch (the guard lifted the read back to start.pos)
-        gen = int(start.get("gen", 0))
-        if plan["reset"] and not same:
-            gen += 1
-        end_pos = int(plan["stop"])
-        if plan["reset"] and not same and end_pos > 1 and not live_buf:
-            # salvage-only batch because the post-reset LIVE range
-            # [0, stop) failed verification (the new incarnation
-            # rotated again or raced away mid-read): commit pos=0, NOT
-            # stop — committing stop would claim a range that was
-            # never read and silently skip the new incarnation's first
-            # records; from pos=0 the next trigger re-plans them
-            # losslessly. (The fleet reader cannot make this choice —
-            # its offsets are committed at plan time — which is why
-            # its docstring calls the same window a residual loss.)
-            # Replay stays deterministic: stop==0 means the replay
-            # emits exactly the salvaged rows this batch emitted.
-            end_pos = 0
-        # salvage bytes are FINAL (the rotated copy will never grow),
-        # so the whole tail parses — no boundary hold-back needed.
-        srows, sn = self._parse(sib_buf, rno0)
-        rows, n = self._parse(live_buf, rno0 + sn)
-        end = {
-            "pos": end_pos,
-            "rno": rno0 + sn + n,
-            "head": e["head"],
-            "head_n": int(e["head_n"]),
-            "gen": gen,
-            "ino": int(e.get("ino", 0)),
-            "sib_n": len(sib_buf),
-            "sib_rn": sn,
-        }
-        return itertools.chain(srows, rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        """Deterministic replay of the committed batch — the
-        exactly-once leg Spark calls on recovery. Every byte is
-        STAMP-VERIFIED against the offsets' incarnation stamps (r12
-        ADVICE): the live range must come from a file still carrying
-        ``end.head`` (or, after one more rotation, from ``<path>.1``
-        matched by ``end.ino`` or the head hash) — a blind read here
-        would replay the NEW incarnation's bytes at the old offsets
-        and emit wrong records as the committed batch. The salvage
-        replay verifies against the START stamp the same way. When a
-        leg fails (crash AND a further rotation in the same window),
-        its rows are dropped — fewer rows than the original batch,
-        never wrong ones; the stored sib_rn keeps the surviving
-        rows' ordinals deterministic."""
-        import itertools
-
-        pos, stop = int(start["pos"]), int(end["pos"])
-        pre = iter([])
-        sib_rn = 0
-        if int(end.get("gen", 0)) > int(start.get("gen", 0)) or stop < pos:
-            # the planned batch spanned a rotation reset (read()
-            # restarted from byte 0 and bumped gen): replay the
-            # salvaged rotated-copy tail, then the post-rotation
-            # range [0, stop).
-            sib_rn = int(end.get("sib_rn", 0))
-            if int(end.get("sib_n", 0)):
-                buf = _read_verified_tail(
-                    self.path + ".1",
-                    start.get("head", ""),
-                    int(start.get("head_n", 0)),
-                    int(start["pos"]),
-                    int(start.get("ino", 0)),
-                    limit=int(end["sib_n"]),
-                )
-                pre, _ = self._parse(buf, int(start["rno"]))
-            pos = 0
-        if stop <= pos:
-            return pre
-        for cand, ino in ((self.path, 0), (self.path + ".1", int(end.get("ino", 0)))):
-            buf, _, _, ok = _verified_range(
-                cand, end.get("head", ""), int(end.get("head_n", 0)),
-                pos, stop, ino,
-            )
-            if ok:
-                rows, _ = self._parse(buf, int(start["rno"]) + sib_rn)
-                return itertools.chain(pre, rows)
-        return pre
-
-
 # ---------------------------------------------------------------------------
 # Fleet tail: MANY growing files, partitioned (executor-side) reads
 # ---------------------------------------------------------------------------
@@ -742,10 +542,10 @@ class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
 # #5) and the re-sharding contract's dedup leg depends on every
 # deployment having it.
 #
-# record_no caveat (differs from the single-file tail): here it is the
-# record's BYTE OFFSET within its file INCARNATION, and it RESETS to 0
-# when the file rotates — (source_file, record_no) is NOT unique across
-# incarnations. The ``incarnation`` column makes the hazard structural
+# record_no caveat: it is the record's BYTE OFFSET within its file
+# INCARNATION, and it RESETS to 0 when the file rotates —
+# (source_file, record_no) is NOT unique across incarnations. The
+# ``incarnation`` column makes the hazard structural
 # (r13 VERDICT #5): it carries "<md5 head stamp>@<inode>" of the
 # incarnation the record's bytes were read from (the live leg's end
 # stamp, or the salvage leg's start stamp) — BOTH legs of the
@@ -760,9 +560,7 @@ class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
 # grows with it) — fine for uniqueness (record_no never repeats
 # within an incarnation), but an idempotent sink keying on the triple
 # should still prefer content keys when its input may contain such
-# embryonic files. The single-file tail's record_no is a
-# never-resetting running ordinal; consumers switching between the
-# two readers must not assume the contracts match.
+# embryonic files.
 MULTI_EVENT_SCHEMA = StructType(
     list(EVENT_SCHEMA.fields)
     + [
@@ -774,8 +572,7 @@ MULTI_EVENT_SCHEMA = StructType(
 
 def _parse_bytes(buf: bytes, base: int, path: str, inc: str = ""):
     """Parse a byte range into event tuples. record_no is the record's
-    BYTE OFFSET within its file incarnation — unlike the single-file
-    tail's running ordinal, a byte offset is derivable from the
+    BYTE OFFSET within its file incarnation — derivable from the
     partition alone (no cross-batch counter in the offsets), monotonic
     per incarnation, and stable under replay. It RESETS on rotation —
     ``inc`` (the incarnation head stamp, see MULTI_EVENT_SCHEMA)
@@ -794,11 +591,11 @@ _ZERO_FILE = {"pos": 0, "head": "", "head_n": 0}
 
 
 class SlowlogMultiTailStreamReader(DataSourceStreamReader):
-    """Tail a FLEET of growing slow-log files (one per mysqld; the
-    many-agents-one-ingest-job deployment) — the partitioned
-    counterpart of SlowlogTailStreamReader: per-file byte offsets in
-    the stream offset dict, one InputPartition per grown file, reads
-    on EXECUTORS (the driver only plans byte ranges).
+    """Tail one growing slow-log file or a FLEET of them (one per
+    mysqld; the many-agents-one-ingest-job deployment): per-file byte
+    offsets in the stream offset dict, one InputPartition per grown
+    file, reads on EXECUTORS (the driver only plans byte ranges). The
+    path is a file, a directory (its ``*.log`` files) or a glob.
 
     Offset model — STATELESS by construction. After a restart whose
     last batch committed, Spark calls ``latestOffset()`` with no start
@@ -808,7 +605,8 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
       {"files": {path: {"pos": <byte after the last complete-record
                                 boundary, backward-scanned from EOF>,
                         "head": md5(first head_n bytes),   # incarnation
-                        "head_n": min(64, size)}}}
+                        "head_n": min(64, size),
+                        "ino": st_ino}}}
 
     Everything start-dependent — the emitted range, copytruncate reset
     detection, rotated-sibling salvage — is derived in
@@ -817,12 +615,12 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
     Spark replays on recovery, so a re-planned batch is byte-identical
     without any driver-side counters.
 
-    Per file and per batch, the same guarantees as the single-file
-    tail: the in-flight torn tail is held back (pos stops at the last
-    record-header boundary); copytruncate is detected via the head
-    stamp (including shrink-below-head_n and regrow-past-offset); the
-    rotated copy's unread tail is best-effort salvaged from
-    ``<path>.1`` when its head matches the OLD incarnation stamp.
+    Per file and per batch: the in-flight torn tail is held back
+    (pos stops at the last record-header boundary); copytruncate is
+    detected via the head stamp (including shrink-below-head_n and
+    regrow-past-offset); the rotated copy's unread tail is
+    best-effort salvaged from ``<path>.1`` when its head matches the
+    OLD incarnation stamp.
 
     record_no is the record's byte offset within its incarnation (see
     MULTI_EVENT_SCHEMA — it resets on rotation), ``source_file``
@@ -839,8 +637,11 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
     the executor read, the executor detects the stamp mismatch and
     reads the planned range from ``<path>.1`` (which IS the planned
     incarnation after one rotation); if that is gone too, the range's
-    records are lost — the same residual window the single-file
-    reader documents.
+    records are lost. The same holds when both live candidates
+    (``<path>`` and ``<path>.1``) fail verification within one read:
+    offsets are committed at plan time, so the planned range is
+    dropped rather than retried (salvage rows, read from the start
+    incarnation, are still emitted once).
 
     Batch sizing: each micro-batch covers ALL growth since the last
     trigger (stateless offsets can't carry an admission-control
@@ -1154,9 +955,6 @@ class SlowlogDataSource(DataSource):
 
     def reader(self, schema):
         return SlowlogReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        return SlowlogTailStreamReader(self.options)
 
 
 def register(spark) -> None:

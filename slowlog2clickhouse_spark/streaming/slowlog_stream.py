@@ -36,13 +36,10 @@ _counter = itertools.count()
 # empty tick that signals no-new-data (plus one interval per offset
 # increment the poll discovers late). The old 500 ms / 1 s cadences cost
 # ~1-2 s of wall-clock sleep per op at zero compute. A live deployment
-# tails at human cadence (the docstrings' 1 s+ guidance stands —
-# override via SPARK_GRAFT_TAIL_TRIGGER_MS); the in-process drain dance
-# wants the poll as cheap as it is: latestOffset() is one os.stat per
-# unchanged file.
-TAIL_DRAIN_TRIGGER = "{} milliseconds".format(
-    int(_os.environ.get("SPARK_GRAFT_TAIL_TRIGGER_MS", "20"))
-)
+# tails at human cadence (`tail --follow` triggers every 5 s); the
+# in-process drain dance wants the poll as cheap as it is:
+# latestOffset() is one os.stat per unchanged file.
+TAIL_DRAIN_TRIGGER = "20 milliseconds"
 
 # header-only sentinel: appending it flushes a file's last real record
 # out of torn-tail hold-back (it itself carries no statement and is
@@ -87,6 +84,26 @@ _STREAM_CLASSES_SQL = f"""
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1, 2
 """
+
+# the tail ops' oracle: the batch class aggregation over the golden IR
+# (the tailed events must be EXACTLY the fixture's events)
+_TAIL_CLASSES_SQL = f"""
+    SELECT digest, count(*) AS num_queries,
+           round(sum(query_time), 6) AS qt_sum
+    FROM {_GOLD}
+    WHERE NOT admin AND query IS NOT NULL
+    GROUP BY 1
+"""
+
+
+def _tail_classes(events: DataFrame) -> DataFrame:
+    """The tail ops' answer: per-digest count and total query time,
+    keyed on the digest the parser attached to each event."""
+    ev = events.where(~F.col("admin") & F.col("query").isNotNull())
+    return ev.groupBy("digest").agg(
+        F.count("*").alias("num_queries"),
+        F.round(F.sum("query_time"), 6).alias("qt_sum"),
+    )
 
 
 def read_slowlog_stream(
@@ -507,10 +524,6 @@ def run_pctl_merge_stream(
     switch; rerunning without it resumes from the checkpoint.
     ``retain`` bounds the committed state parts kept on disk (see
     merge_pctl_partial's GC)."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import (
         FIXTURE_LOG,
         qt_hist_bucket,
@@ -531,13 +544,8 @@ def run_pctl_merge_stream(
         & F.col("query").isNotNull()
         & F.col("query_time").isNotNull()
     )
-    # routed (state-machine-exact) digests on the stream path too —
-    # one stateless masked projection, micro-batch safe (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint").select(
-        digest_col(F.col("fingerprint")).alias("digest"),
-        qt_hist_bucket().alias("bucket"),
-    )
+    # the parser's state-machine digest rides on every event
+    ev = ev.select("digest", qt_hist_bucket().alias("bucket"))
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if fail_at_epoch is not None and epoch_id >= fail_at_epoch:
@@ -556,16 +564,9 @@ def run_pctl_merge_stream(
 
 @op(
     "stream_slowlog_tail",
-    # oracle = the batch class aggregation over the same golden IR:
     # the tail reader must deliver EXACTLY the fixture's events across
     # its incremental reads (torn-tail record flushed by the sentinel)
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail ONE GROWING slow-log file — the reference's actual
@@ -573,11 +574,12 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends; SURVEY §2 A8/J). Spark's built-in file stream never
     re-reads a grown file, so this runs on the engine's Python Data
     Source streaming reader (sources/slowlog_datasource.py
-    SlowlogTailStreamReader): offsets are byte positions of
-    complete-record boundaries, the in-flight torn tail is held back
-    until a later record header terminates it, and readBetweenOffsets
-    replays exact byte ranges for exactly-once recovery
-    (tests/test_streaming.py pins kill-and-restart equals batch).
+    SlowlogMultiTailStreamReader, pointed at the one file): offsets
+    are byte positions of complete-record boundaries, the in-flight
+    torn tail is held back until a later record header terminates it,
+    and partitions(start, end) re-plans exact byte ranges for
+    exactly-once recovery (tests/test_streaming.py pins
+    kill-and-restart equals batch).
 
     The op reproduces the deployment dance deterministically: write
     half the fixture, drain, append the rest plus a header-only
@@ -585,10 +587,6 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     and carries no statement), drain again — then classes the tailed
     events. A hash match against the golden IR proves no event was
     lost, duplicated, or torn across the grow boundary."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -603,7 +601,7 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"tailed_{_os.path.basename(base)}"
     q = (
-        spark.readStream.format("slowlog")
+        spark.readStream.format("slowlog_tail_multi")
         .option("path", src)
         .load()
         .writeStream.format("memory")
@@ -620,35 +618,19 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    ev = spark.table(name).where(~F.col("admin") & F.col("query").isNotNull())
-    # routed (state-machine-exact) digests for tailed events too —
-    # the same masked single-pass routing as batch ingest (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(spark.table(name))
 
 
 @op(
     "stream_slowlog_tail_multi",
-    # oracle = the same batch class aggregation over the golden IR:
     # the FLEET tail (two concurrently-growing files) must deliver
     # exactly the fixture's events — no loss, dup, or tear on either
     # file's grow boundary, and the union must re-assemble the corpus
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail a FLEET of growing slow-log files — many mysqlds, one
-    ingest job (the deployment the single-file tail's docstring
-    explicitly defers). Runs on the PARTITIONED Python Data Source
+    ingest job. Runs on the PARTITIONED Python Data Source
     stream reader (sources/slowlog_datasource.py
     SlowlogMultiTailStreamReader): per-file byte offsets live in the
     stream offset dict, each grown file becomes its own
@@ -677,12 +659,7 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     disambiguates the reset: (source_file, incarnation, record_no) is
     unique across incarnations exactly as strongly as rotation
     detection itself (see MULTI_EVENT_SCHEMA), so idempotent sinks
-    have a structural key — unlike the single-file tail whose
-    record_no is a never-resetting ordinal."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
+    have a structural key."""
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -719,31 +696,16 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    ev = spark.table(name).where(~F.col("admin") & F.col("query").isNotNull())
-    # routed (state-machine-exact) digests for tailed events too —
-    # the same masked single-pass routing as batch ingest (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(spark.table(name))
 
 
 @op(
     "stream_slowlog_tail_sharded",
-    # oracle = the same batch class aggregation over the golden IR as
-    # the other tail ops: the SHARDED fleet (two independent streams
-    # over disjoint hash-slices of the same log directory) must
-    # re-assemble the corpus exactly — no file unclaimed, none claimed
-    # twice, no loss or tear inside either shard
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    # the SHARDED fleet (two independent streams over disjoint
+    # hash-slices of the same log directory) must re-assemble the
+    # corpus exactly — no file unclaimed, none claimed twice, no loss
+    # or tear inside either shard
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fleet-width SCALE-OUT shape on the driver-checked record
@@ -775,10 +737,6 @@ def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     __init__), pinned by tests/test_streaming.py
     test_multi_tail_reshard_{contract,real_checkpoints,any_width}
     (r14 VERDICT #6)."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -820,12 +778,7 @@ def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name in names:
         t = spark.table(name)
         union = t if union is None else union.unionByName(t)
-    ev = union.where(~F.col("admin") & F.col("query").isNotNull())
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(union)
 
 
 # The structural idempotency key of the multi-tail source: unique per

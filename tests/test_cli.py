@@ -152,7 +152,7 @@ _CLEAN = (
 
 def test_cli_paths_agree_on_exact_digests(spark, tmp_path):
     """One log through CLI `ingest`, `stream`, `tail` on the file and
-    `tail` on its directory (the fleet reader): every path yields the
+    `tail` on its directory (one tail reader): every path yields the
     same (digest, num_queries) multiset, and each digest is the state
     machine's — digest_py(fingerprint_py(query)). So `ingest` history
     followed by `tail --from latest` never splits a query class."""
@@ -284,7 +284,7 @@ def test_cli_drain_refuses_append_sink_dir(tmp_path):
 
 @pytest.mark.slow  # r17 driver-budget deselection (VERDICT r16 #6); in the full suite via scripts/ptest.py
 def test_cli_tail_fleet_directory_drains_to_batch_equivalent(spark, tmp_path):
-    """`tail --log <dir>` must select the partitioned fleet reader and
+    """`tail --log <dir>` must tail every file of the directory and
     drain classes equal to the batch pipeline over both files' union
     (each file is a 'mysqld' holding half the fixture)."""
     import re

@@ -454,23 +454,22 @@ def test_multi_tail_exactly_once_under_random_rotation(tmp_path_factory, ops):
 )
 @settings(max_examples=int(_os.environ.get("SPARK_GRAFT_FUZZ_TAIL", "150")), deadline=None)
 def test_single_tail_exactly_once_under_random_rotation(tmp_path_factory, ops):
-    """The single-file reader's twin of the fleet property: same
-    schedule space, but exercising the Simple reader's distinct code
-    paths — running rno ordinals, the gen reset counter, and
-    readBetweenOffsets as the replay leg (asserted equal to the live
-    read at every poll)."""
+    """The fleet property's schedule space on ONE file: the tail
+    reader pointed at a plain file path (which globs to itself), with
+    re-planning partitions(start, end) as the replay leg (asserted
+    equal to the live read at every poll)."""
     import os
     import shutil
 
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
+        SlowlogMultiTailStreamReader,
     )
 
     base = tmp_path_factory.mktemp("tail_fuzz")
     p = os.path.join(str(base), "slow.log")
     open(p, "w").close()
 
-    r = SlowlogTailStreamReader({"path": p})
+    r = SlowlogMultiTailStreamReader({"path": p})
     off = r.initialOffset()
     written: list[int] = []
     emitted: list[str] = []
@@ -479,17 +478,19 @@ def test_single_tail_exactly_once_under_random_rotation(tmp_path_factory, ops):
 
     def poll():
         nonlocal off, rotated_since_poll
-        rows, end = r.read(off)
-        rows = list(rows)
+        end = r.latestOffset()
+        rows = [t for p_ in r.partitions(off, end) for t in r.read(p_)]
         emitted.extend(
             q for t in rows for q in t if isinstance(q, str) and q.startswith("SELECT")
         )
-        if end != off:
-            # the recovery leg must replay the exact same rows
-            replay = list(r.readBetweenOffsets(off, end))
-            assert replay == rows, (off, end)
+        # the recovery leg must replay the exact same rows
+        replay = [t for p_ in r.partitions(off, end) for t in r.read(p_)]
+        assert replay == rows, (off, end)
         off = end
         rotated_since_poll = False
+
+    def stamped() -> bool:
+        return bool(int(off["files"].get(p, {}).get("head_n", 0)))
 
     for kind, k in ops:
         if kind == "append":
@@ -501,9 +502,9 @@ def test_single_tail_exactly_once_under_random_rotation(tmp_path_factory, ops):
         elif kind in ("copytruncate", "rename"):
             if rotated_since_poll:
                 poll()
-            if not int(off.get("head_n", 0)):
+            if not stamped():
                 poll()
-                if not int(off.get("head_n", 0)):
+                if not stamped():
                     continue  # nothing observed yet: rotation is a no-op
             if kind == "copytruncate":
                 shutil.copyfile(p, p + ".1")

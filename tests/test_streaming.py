@@ -741,11 +741,11 @@ def test_pctl_merge_scheme_qualified_base(spark, tmp_path):
 
 
 def test_slowlog_tail_restart_no_loss_no_dup(spark, tmp_path):
-    """The growing-file tail reader's exactly-once contract: kill the
-    query between grows, restart against the same checkpoint — the
-    parquet sink must hold exactly the fixture's events (offset replay
-    via readBetweenOffsets, no loss, no dup, torn tail flushed by the
-    sentinel record)."""
+    """The growing-file tail reader's exactly-once contract on ONE file:
+    kill the query between grows, restart against the same checkpoint
+    — the parquet sink must hold exactly the fixture's events (offset
+    replay via partitions(start, end), no loss, no dup, torn tail
+    flushed by the sentinel record)."""
     import re
 
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
@@ -764,7 +764,7 @@ def test_slowlog_tail_restart_no_loss_no_dup(spark, tmp_path):
 
     def run_query():
         return (
-            spark.readStream.format("slowlog")
+            spark.readStream.format("slowlog_tail_multi")
             .option("path", src)
             .load()
             .writeStream.format("parquet")
@@ -801,109 +801,6 @@ def test_slowlog_tail_restart_no_loss_no_dup(spark, tmp_path):
     assert g == w
 
 
-def test_slowlog_tail_holds_back_torn_record(spark, tmp_path):
-    """A record still being written (no later record header) must NOT
-    be emitted — the torn-tail hazard every tailer has."""
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
-    )
-
-    src = str(tmp_path / "slow.log")
-    rec = (
-        "# Time: 2024-01-01T00:00:0{i}.000000Z\n"
-        "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-        "SELECT {i};\n"
-    )
-    with open(src, "w") as f:
-        f.write(rec.format(i=1))
-        f.write(rec.format(i=2))
-        f.write("# Time: 2024-01-01T00:00:03.000000Z\n# Query_time: 0.5")  # torn
-
-    r = SlowlogTailStreamReader({"path": src})
-    rows, end = r.read(r.initialOffset())
-    rows = list(rows)
-    # two complete records emitted; the torn third held back
-    assert len(rows) == 2
-    # replay of the exact committed range is identical (exactly-once leg)
-    replay = list(r.readBetweenOffsets(r.initialOffset(), end))
-    assert replay == rows
-    # after the writer finishes the record and starts another, it flushes
-    with open(src, "a") as f:
-        f.write("  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\nSELECT 3;\n")
-        f.write("# Time: 2024-01-01T00:00:04.000000Z\n# Query_time: 0.1\n")
-    rows2, end2 = r.read(end)
-    assert len(list(rows2)) == 1  # the completed record 3
-
-
-def test_slowlog_tail_recovers_from_copytruncate(spark, tmp_path):
-    """logrotate copytruncate shrinks the live file below the stream's
-    offset; the reader must reset to the head and keep emitting rather
-    than stall at the stale offset forever."""
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
-    )
-
-    src = str(tmp_path / "slow.log")
-    rec = (
-        "# Time: 2024-01-01T00:00:0{i}.000000Z\n"
-        "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-        "SELECT {i};\n"
-    )
-    terminator = "# Time: 2030-01-01T00:00:00.000000Z\n# Query_time: 0.1\n"
-    with open(src, "w") as f:
-        f.write(rec.format(i=1) + rec.format(i=2) + terminator)
-    r = SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert len(list(rows)) == 2
-
-    with open(src, "w") as f:  # copytruncate: back to zero, regrow
-        f.write(rec.format(i=7) + terminator)
-    rows2, off2 = r.read(off)
-    vals = [t for t in rows2]
-    assert len(vals) == 1
-    assert off2["pos"] < int(off["pos"])  # offset reset below the stale one
-
-
-def test_slowlog_tail_detects_regrow_past_offset(spark, tmp_path):
-    """The hard copytruncate case the size check alone misses: the new
-    incarnation regrows PAST the stale offset between polls. The
-    head-hash incarnation stamp must trigger the reset; the replay of
-    a reset-spanning batch must return its records, not empty (both
-    r11 code-review finds)."""
-    import os
-
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
-    )
-
-    src = str(tmp_path / "slow.log")
-    rec = (
-        "# Time: 2024-01-01T00:00:0{i}.000000Z\n"
-        "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-        "SELECT {i}{pad};\n"
-    )
-    terminator = "# Time: 2030-01-01T00:00:00.000000Z\n# Query_time: 0.1\n"
-    with open(src, "w") as f:
-        f.write(rec.format(i=1, pad="") + terminator)
-    r = SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert len(list(rows)) == 1
-    old_pos = int(off["pos"])
-
-    # truncate + rewrite with MORE bytes than the stale offset
-    pad = " /* regrown content longer than before " + "x" * 200 + " */"
-    with open(src, "w") as f:
-        f.write(rec.format(i=8, pad=pad) + rec.format(i=9, pad=pad) + terminator)
-    assert os.path.getsize(src) > old_pos  # size check alone would miss it
-
-    rows2, off2 = r.read(off)
-    vals = list(rows2)
-    assert len(vals) == 2  # both post-rotation records, from byte 0
-    # reset-spanning replay: same records, not empty
-    replay = list(r.readBetweenOffsets(off, off2))
-    assert len(replay) == 2
-
-
 def test_slowlog_tail_detects_shrink_below_head_n(spark, tmp_path):
     """The r11 advisor's probe: copytruncate where the new incarnation
     regrows to a size >= the stale offset but < head_n. head_n was <=
@@ -923,8 +820,8 @@ def test_slowlog_tail_detects_shrink_below_head_n(spark, tmp_path):
     # direct probe from ADVICE.md: size=30 satisfies pos <= size <
     # head_n, so the pre-r11 code skipped the hash check and planned
     # no reset — stale-offset reads from the new file. The decision
-    # now lives in the ONE shared planner both readers use.
-    off = {"pos": 10, "rno": 3, "head": "deadbeef", "head_n": 64, "gen": 0}
+    # now lives in the ONE planner the tail reader uses.
+    off = {"pos": 10, "head": "deadbeef", "head_n": 64}
     plan = _plan_file_range(src, off, _stamp_file(src))
     assert plan is not None and plan["reset"] is True
     # and the boundary cases still behave: size >= head_n goes through
@@ -938,8 +835,7 @@ def test_slowlog_tail_detects_shrink_below_head_n(spark, tmp_path):
     # note e.pos < s.pos with a MATCHING head is still a reset: a
     # committed boundary cannot disappear under append-only growth,
     # so its absence proves truncate+regrow behind an identical
-    # >=64-byte preamble (the regime the pre-unification single
-    # reader missed)
+    # >=64-byte preamble
     import hashlib
 
     with open(src, "w") as f:
@@ -950,89 +846,42 @@ def test_slowlog_tail_detects_shrink_below_head_n(spark, tmp_path):
     assert plan["pos"] == 10  # resumes at the committed offset
 
 
-def test_slowlog_tail_salvages_rotated_sibling(spark, tmp_path):
-    """copytruncate with a <path>.1 sibling (logrotate's default
-    layout): complete-but-not-yet-read records written between the
-    last poll and the rotation leave with the rotated copy. The
-    reader must salvage them from the sibling (verified as OUR
-    incarnation via the head stamp) instead of silently dropping
-    them, and the reset-spanning replay must reproduce the full
-    batch — salvage rows included."""
-    import shutil
-
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
-    )
-
-    src = str(tmp_path / "slow.log")
-    rec = (
-        "# Time: 2024-01-01T00:00:0{i}.000000Z\n"
-        "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-        "SELECT {i};\n"
-    )
-    terminator = "# Time: 2030-01-01T00:00:00.000000Z\n# Query_time: 0.1\n"
-    with open(src, "w") as f:
-        f.write(rec.format(i=1) + terminator)
-    r = SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert len(list(rows)) == 1
-
-    # two more COMPLETE records land after the poll...
-    with open(src, "a") as f:
-        f.write(rec.format(i=2) + rec.format(i=3))
-    # ...then logrotate copytruncates: copy -> slow.log.1, truncate live
-    shutil.copyfile(src, src + ".1")
-    with open(src, "w") as f:
-        f.write(rec.format(i=8) + terminator)
-
-    rows2, off2 = r.read(off)
-    got = [t for t in rows2]
-    queries = sorted(q for t in got for q in t if isinstance(q, str) and q.startswith("SELECT"))
-    # 2 + terminator-held record from the sibling tail, 1 from the new file
-    assert queries == ["SELECT 2", "SELECT 3", "SELECT 8"], queries
-    assert int(off2["gen"]) == int(off["gen"]) + 1
-    # reset-spanning replay reproduces the whole batch, salvage included
-    replay = list(r.readBetweenOffsets(off, off2))
-    assert replay == got
-
-
 def test_slowlog_tail_salvage_only_batch_advances_offset(spark, tmp_path):
     """Salvage with NO complete record in the new file yet must still
     advance the offset past the reset — otherwise every poll would
-    re-salvage and re-emit the same rows (duplicate emission)."""
+    re-salvage and re-emit the same rows (duplicate emission). The
+    tail reader is pointed at ONE file."""
     import shutil
 
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
+        SlowlogMultiTailStreamReader,
     )
 
     src = str(tmp_path / "slow.log")
-    rec = (
-        "# Time: 2024-01-01T00:00:0{i}.000000Z\n"
-        "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-        "SELECT {i};\n"
-    )
-    terminator = "# Time: 2030-01-01T00:00:00.000000Z\n# Query_time: 0.1\n"
     with open(src, "w") as f:
-        f.write(rec.format(i=1) + terminator)
-    r = SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert len(list(rows)) == 1
+        f.write(_mk_rec(1) + _TERM)
+    r = SlowlogMultiTailStreamReader({"path": src})
+    rows, off = _multi_plan(r, r.initialOffset())
+    assert _queries(rows) == ["SELECT 1"]
 
     with open(src, "a") as f:
-        f.write(rec.format(i=2))
+        f.write(_mk_rec(2))
     shutil.copyfile(src, src + ".1")
     with open(src, "w") as f:
         f.write("# Time: 2024-01-01T00:00:09.000000Z\n# Query_time: 0.5")  # torn
 
-    rows2, off2 = r.read(off)
+    rows2, off2 = _multi_plan(r, off)
     # salvaged: the previously held-back terminator record (complete
     # now — the rotated copy is final) + SELECT 2
-    assert len(list(rows2)) == 2
-    assert int(off2["gen"]) == int(off["gen"]) + 1
+    assert len(rows2) == 2
+    assert _queries(rows2) == ["SELECT 2"]
+    # the offset moved onto the new incarnation: its stamp, byte 0
+    # (no complete record in it yet)
+    assert off2["files"][src]["head"] != off["files"][src]["head"]
+    assert off2["files"][src]["pos"] == 0
     # next poll from off2: no re-salvage, no duplicates
-    rows3, off3 = r.read(off2)
-    assert list(rows3) == []
+    rows3, _ = _multi_plan(r, off2)
+    assert rows3 == []
 
 
 def test_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
@@ -1061,7 +910,7 @@ def test_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
             "Rows_sent: 0  Rows_examined: 0\n"
         )
     events = (
-        spark.readStream.format("slowlog").option("path", src).load()
+        spark.readStream.format("slowlog_tail_multi").option("path", src).load()
     )
     q = (
         stream_classes(events)
@@ -1690,6 +1539,10 @@ def test_multi_tail_detects_regrow_past_offset(spark, tmp_path):
 
     rows2, off2 = _multi_plan(r, off)
     assert sorted(_queries(rows2)) == [f"SELECT 8{pad}", f"SELECT 9{pad}"]
+    # reset-spanning replay: same records, not empty
+    parts = r.partitions(off, off2)
+    replay = [t for p in parts for t in r.read(p)]
+    assert sorted(map(repr, replay)) == sorted(map(repr, rows2))
 
 
 def test_multi_tail_discovers_new_file(spark, tmp_path):
@@ -1791,15 +1644,14 @@ def test_multi_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
 
 
 def test_single_tail_detects_rename_rotation_identical_preamble(spark, tmp_path):
-    """logrotate create/rename with an identical >=64-byte preamble:
-    the head hash alone cannot see the rotation (both incarnations
-    hash equal), the inode leg must — and the salvage leg must accept
-    the renamed ORIGINAL at <path>.1 via its inode even though the
-    new live file carries the same head bytes (r12 code-review find)."""
-    import os
-
+    """logrotate create/rename with an identical >=64-byte preamble on
+    ONE tailed file: the head hash alone cannot see the rotation (both
+    incarnations hash equal), the inode leg must — and the salvage leg
+    must accept the renamed ORIGINAL at <path>.1 via its inode even
+    though the new live file carries the same head bytes (r12
+    code-review find)."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        SlowlogTailStreamReader,
+        SlowlogMultiTailStreamReader,
     )
 
     # identical 100-byte preamble on every incarnation (mysqld banner)
@@ -1807,10 +1659,11 @@ def test_single_tail_detects_rename_rotation_identical_preamble(spark, tmp_path)
     src = str(tmp_path / "slow.log")
     with open(src, "w") as f:
         f.write(preamble + _mk_rec(1) + _mk_rec(2))
-    r = SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert len(list(rows)) == 1  # rec 1 complete; rec 2 is the torn tail
-    assert int(off.get("ino", 0)) != 0
+    r = SlowlogMultiTailStreamReader({"path": src})
+    rows, off = _multi_plan(r, r.initialOffset())
+    assert _queries(rows) == ["SELECT 1"]  # rec 2 is the torn tail
+    e = off["files"][src]
+    assert int(e["ino"]) != 0
 
     # create/rename rotation: our inode moves to .1, the new file gets
     # the SAME preamble and regrows past the stale offset
@@ -1818,17 +1671,18 @@ def test_single_tail_detects_rename_rotation_identical_preamble(spark, tmp_path)
     pad = " /* regrown well past the old offset " + "x" * 200 + " */"
     with open(src, "w") as f:
         f.write(preamble + _mk_rec(8, pad) + _mk_rec(9, pad) + _TERM)
-    assert os.path.getsize(src) > int(off["pos"])
+    assert os.path.getsize(src) > int(e["pos"])
     # head hash of the first 64 bytes is IDENTICAL across incarnations
     assert open(src, "rb").read(64) == open(src + ".1", "rb").read(64)
 
-    rows2, off2 = r.read(off)
+    rows2, off2 = _multi_plan(r, off)
     qs = _queries(rows2)
     # salvage recovered rec 2 from the renamed original (inode leg),
     # and the new incarnation was read from byte 0 (reset, not stale)
-    assert f"SELECT 8{pad}" in qs and f"SELECT 9{pad}" in qs, qs
-    assert "SELECT 2" in qs, qs
-    assert int(off2["gen"]) == int(off["gen"]) + 1
+    assert qs == ["SELECT 2", f"SELECT 8{pad}", f"SELECT 9{pad}"], qs
+    assert off2["files"][src]["ino"] != e["ino"]
+    # salvage rows carry the old incarnation's stamp, live rows the new
+    assert len({t[-1] for t in rows2}) == 2
 
 
 def test_multi_tail_excludes_rotated_siblings_from_glob(spark, tmp_path):
@@ -2021,13 +1875,12 @@ def test_multi_tail_vanished_file_entry_expires(spark, tmp_path):
 
 
 def test_tail_start_at_latest_skips_backlog(spark, tmp_path):
-    """startAt=latest (`tail -F` semantics) on both readers: the
-    existing backlog is skipped — its bulk-load is the batch reader's
-    job — and only post-start appends are emitted; rotation detection
-    still works from the stamped initial offset."""
+    """startAt=latest (`tail -F` semantics): the existing backlog is
+    skipped — its bulk-load is the batch reader's job — and only
+    post-start appends are emitted; rotation detection still works
+    from the stamped initial offset."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
         SlowlogMultiTailStreamReader,
-        SlowlogTailStreamReader,
     )
 
     logs = tmp_path / "logs"
@@ -2036,18 +1889,6 @@ def test_tail_start_at_latest_skips_backlog(spark, tmp_path):
     with open(src, "w") as f:
         f.write(_mk_rec(1) + _mk_rec(2) + _TERM)  # the backlog
 
-    # single reader
-    r = SlowlogTailStreamReader({"path": src, "startat": "latest"})
-    off = r.initialOffset()
-    assert int(off["pos"]) > 0 and int(off["head_n"]) > 0  # stamped
-    rows, off1 = r.read(off)
-    assert list(rows) == []  # backlog skipped
-    with open(src, "a") as f:
-        f.write(_mk_rec(9) + _TERM)
-    rows2, off2 = r.read(off1)
-    assert _queries(list(rows2)) == ["SELECT 9"]
-
-    # fleet reader
     m = SlowlogMultiTailStreamReader({"path": str(logs), "startat": "latest"})
     moff = m.initialOffset()
     assert src in moff["files"] and int(moff["files"][src]["pos"]) > 0
@@ -2059,14 +1900,12 @@ def test_tail_start_at_latest_skips_backlog(spark, tmp_path):
     assert _queries(rows4) == ["SELECT 11"]
 
     # default stays earliest
-    r2 = SlowlogTailStreamReader({"path": src})
-    rows5, _ = r2.read(r2.initialOffset())
-    assert "SELECT 1" in _queries(list(rows5))
-
-    import pytest
+    r2 = SlowlogMultiTailStreamReader({"path": src})
+    rows5, _ = _multi_plan(r2, r2.initialOffset())
+    assert "SELECT 1" in _queries(rows5)
 
     with pytest.raises(ValueError, match="startAt"):
-        SlowlogTailStreamReader({"path": src, "startat": "yesterday"})
+        SlowlogMultiTailStreamReader({"path": src, "startat": "yesterday"})
 
 
 def test_multi_tail_orphan_sibling_stays_excluded_after_expiry(spark, tmp_path):
@@ -2159,7 +1998,7 @@ def test_tail_routed_streamed_classes_equal_batch_on_adversarial_corpus(
     register(spark)
     name = "adv_tail_corpus"
     q = (
-        spark.readStream.format("slowlog")
+        spark.readStream.format("slowlog_tail_multi")
         .option("path", src)
         .load()
         .writeStream.format("memory")
@@ -2255,7 +2094,7 @@ def test_stream_classes_routed_inside_microbatch_equals_routed_batch(
     name = "adv_stream_classes_routed"
     q = (
         stream_classes(
-            spark.readStream.format("slowlog").option("path", src).load()
+            spark.readStream.format("slowlog_tail_multi").option("path", src).load()
         )
         .writeStream.format("memory")
         .queryName(name)
@@ -2381,12 +2220,13 @@ def test_read_planned_range_empty_same_incarnation_skips_salvage(tmp_path):
 def test_single_tail_salvage_only_when_live_leg_unverifiable(
     spark, tmp_path, monkeypatch
 ):
-    """r13 review find: when a reset batch's salvage succeeds but the
-    post-reset LIVE range fails verification (the new incarnation
-    raced away mid-read), the committed offset must NOT claim the
-    live range — commit pos=0 so the next trigger re-plans the new
-    incarnation's records losslessly, and the reset-spanning replay
-    reproduces exactly the salvage-only emission."""
+    """The documented residual of the tail reader: a reset batch whose
+    salvage succeeds but whose post-reset LIVE range fails
+    verification on both candidates (the new incarnation raced away
+    mid-read). Offsets are committed at plan time, so the live range
+    is dropped, not retried. Pinned: the salvage rows are emitted
+    exactly once, no bytes come from the failed leg, and the next
+    poll emits no duplicates."""
     import shutil
 
     from slowlog2clickhouse_spark.sources import slowlog_datasource as ds
@@ -2394,12 +2234,12 @@ def test_single_tail_salvage_only_when_live_leg_unverifiable(
     src = str(tmp_path / "slow.log")
     with open(src, "w") as f:
         f.write(_mk_rec(1) + _TERM)
-    r = ds.SlowlogTailStreamReader({"path": src})
-    rows, off = r.read(r.initialOffset())
-    assert _queries(list(rows)) == ["SELECT 1"]
+    r = ds.SlowlogMultiTailStreamReader({"path": src})
+    rows, off = _multi_plan(r, r.initialOffset())
+    assert _queries(rows) == ["SELECT 1"]
 
-    # two complete records land, then copytruncate keeps them in .1
-    # and the NEW incarnation arrives with its own complete record
+    # a complete record lands, then copytruncate keeps it in .1 and
+    # the NEW incarnation arrives with its own complete record
     with open(src, "a") as f:
         f.write(_mk_rec(2))
     shutil.copyfile(src, src + ".1")
@@ -2407,26 +2247,20 @@ def test_single_tail_salvage_only_when_live_leg_unverifiable(
         f.write(_mk_rec(8) + _TERM)
 
     # make every live-leg candidate read fail verification, leaving
-    # only the (independently verified) salvage leg — the race window
-    # where the new incarnation rotates again mid-read
+    # only the (independently verified) salvage leg
     real = ds._verified_range
-
-    def no_live(path, *a, **k):
-        return b"", 0, False, False
-
-    monkeypatch.setattr(ds, "_verified_range", no_live)
-    rows2, off2 = r.read(off)
+    monkeypatch.setattr(ds, "_verified_range", lambda *a, **k: (b"", 0, False, False))
+    rows2, off2 = _multi_plan(r, off)
     monkeypatch.setattr(ds, "_verified_range", real)
-    qs = _queries(list(rows2))
-    assert qs == ["SELECT 2"]  # salvage only (terminator flushed rec 2)
-    assert int(off2["pos"]) == 0  # live range NOT claimed
-    assert int(off2["gen"]) == int(off["gen"]) + 1
-    # reset-spanning replay == exactly the salvage-only emission
-    replay = _queries(list(r.readBetweenOffsets(off, off2)))
-    assert replay == qs
-    # next trigger recovers the new incarnation from byte 0 — no loss
-    rows3, off3 = r.read(off2)
-    assert _queries(list(rows3)) == ["SELECT 8"]
+    # salvage only (the terminator flushed rec 2); every row carries
+    # the OLD incarnation's stamp — nothing came from the failed leg
+    assert _queries(rows2) == ["SELECT 2"]
+    sib = off["files"][src]
+    assert {t[-1] for t in rows2} == {f"{sib['head']}@{sib['ino']}"}
+    # the plan committed the new incarnation's range: the next poll
+    # re-salvages nothing and SELECT 8 is the documented loss
+    rows3, _ = _multi_plan(r, off2)
+    assert rows3 == []
 
 
 def test_multi_tail_restart_during_outage_keeps_positions(spark, tmp_path):

@@ -7,6 +7,7 @@ import pytest
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -130,6 +131,54 @@ def test_ann_recall_eval_bounds_and_truth_size(spark, sf_dir):
     assert rows["lsh"]["recall"] >= rows["lsh_8p_single"]["recall"]
     # IVF(nprobe=4) still leads on this corpus (≈0.65 vs 0.40)
     assert rows["ivf"]["recall"] >= rows["lsh"]["recall"]
+
+
+def test_ann_recall_eval_ranks_null_similarity_last(spark, sf_dir, tmp_path):
+    """A NULL element in one candidate's embedding makes its cos_sim
+    NULL against every probe. The top-3 aggregate must rank it LAST,
+    as the old `cos_sim DESC` window and the DuckDB oracle do, so the
+    recall answer equals the one over the corpus WITHOUT that
+    candidate. Ranked first, it would enter every probe's truth top-3
+    and push out a true neighbour. (The DuckDB oracle itself cannot
+    run here: list_cosine_similarity rejects NULL elements.)"""
+    import duckdb
+
+    from slowlog2clickhouse_spark.operators.vector import IVF_K
+
+    victim = 25  # a candidate (vec_id >= 20) that is not an IVF centroid
+    con = duckdb.connect()
+    src = f"read_parquet('{sf_dir}/embeddings.parquet')"
+    assert victim not in {
+        r[0]
+        for r in con.execute(
+            f"SELECT vec_id FROM {src} ORDER BY CAST(('0x' || substr("
+            f"md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT), vec_id "
+            f"LIMIT {IVF_K}"
+        ).fetchall()
+    }
+    variants = {
+        "null": f"""SELECT vec_id,
+                 CASE WHEN vec_id = {victim}
+                      THEN list_transform(
+                        list_zip(embedding, range(len(embedding))),
+                        z -> CASE WHEN z[2] = 1 THEN NULL ELSE z[1] END)
+                      ELSE embedding END AS embedding,
+                 label FROM {src}""",
+        "dropped": f"SELECT * FROM {src} WHERE vec_id <> {victim}",
+    }
+    got = {}
+    for name, sql in variants.items():
+        os.makedirs(tmp_path / name)
+        con.execute(
+            f"COPY ({sql}) TO '{tmp_path / name}/embeddings.parquet' (FORMAT PARQUET)"
+        )
+        df = OPS["ann_recall_eval"].fn(spark, str(tmp_path / name))
+        got[name] = sorted(tuple(r) for r in df.collect())
+    assert con.execute(
+        f"SELECT count(*) FROM read_parquet('{tmp_path}/null/embeddings.parquet') "
+        "WHERE len(list_filter(embedding, x -> x IS NULL)) > 0"
+    ).fetchone()[0] == 1
+    assert got["null"] == got["dropped"]
 
 
 def test_nprobe_sweep_recall_is_monotone_in_nprobe(spark, sf_dir):
