@@ -268,7 +268,11 @@ def guarded_time_df(
         s0 = cpu_steal_snapshot()
         ts = time_df(spark, build, runs=runs)
         st = cpu_steal_pct(s0, cpu_steal_snapshot())
-        if best_ts is None or (st or 0.0) < (best_steal or 0.0):
+        # a retry whose steal could not be measured (None) never
+        # replaces a measured attempt: unknown health is not clean
+        if best_ts is None or (
+            st is not None and (best_steal is None or st < best_steal)
+        ):
             best_ts, best_steal = ts, st
         if st is None or st <= STEAL_RETRY_PCT:
             break

@@ -392,6 +392,15 @@ _VALUES_RE = re.compile(
 )
 
 _ASCII_DIGITS = "0123456789"
+# a run of ASCII characters none of whose branches below can fire:
+# no quote, comment opener ('#', '-', '/') or digit. Such a run maps to
+# its .lower() in one step; everything else (including all non-ASCII,
+# whose lower-casing depends on context — 'Σ' at a word end is 'ς')
+# takes the per-character path.
+_PLAIN_RUN = re.compile(r"[^'\"#/0-9\-\x80-\U0010ffff]+")
+_WS_RE = re.compile(r"\s+", re.ASCII)
+# a token starting at a digit: ASCII letters, digits and dots
+_NUM_TOKEN = re.compile(r"[0-9A-Za-z.]+")
 
 
 def _ascii_alnum(ch: str) -> bool:
@@ -434,7 +443,14 @@ def fingerprint_py(query: str) -> str:
         return None
     out: list[str] = []
     i, n = 0, len(query)
+    plain = _PLAIN_RUN.match
     while i < n:
+        m = plain(query, i)
+        if m is not None:
+            out.append(m.group().lower())
+            i = m.end()
+            if i == n:
+                break
         ch = query[i]
         if ch in ("'", '"'):
             quote = ch
@@ -464,9 +480,7 @@ def fingerprint_py(query: str) -> str:
             out.append(" ")
             continue
         if ch in _ASCII_DIGITS:
-            j = i
-            while j < n and (_ascii_alnum(query[j]) or query[j] == "."):
-                j += 1
+            j = _NUM_TOKEN.match(query, i).end()
             # signed exponent: '1E-5' — the sign isn't alnum, so extend
             # the token when an e/E is followed by [+-]digits
             if (
@@ -480,7 +494,8 @@ def fingerprint_py(query: str) -> str:
                 while j < n and query[j] in _ASCII_DIGITS:
                     j += 1
             tok = query[i:j]
-            prev = out[-1] if out else ""
+            # the last character emitted (a plain run appends many)
+            prev = out[-1][-1] if out else ""
             # not part of an identifier like t1 / col2
             if (not prev or not (_ascii_alnum(prev) or prev == "_")) and (
                 _NUM_RE.match(tok) or _HEX_RE.match(tok) or _BIN_RE.match(tok)
@@ -499,7 +514,7 @@ def fingerprint_py(query: str) -> str:
     s = _VALUES_RE.sub("values(?+)", s)
     # strip(" ") not strip(): Java trim / DuckDB trim remove only
     # 0x20; Python strip() would also eat a trailing NBSP (r11)
-    s = re.sub(r"\s+", " ", s, flags=re.ASCII).strip(" ")
+    s = _WS_RE.sub(" ", s).strip(" ")
     return s
 
 

@@ -63,7 +63,7 @@ _LONG_METRICS = {"rows_sent", "rows_examined", "bytes_sent"}
 
 
 def _battery_sql() -> str:
-    """DuckDB mirror of plans.pipeline.class_agg_exprs under the
+    """DuckDB mirror of the plans.pipeline stat battery under the
     driver-facing float canonicalization (module docstring)."""
     cols: list[str] = []
     for m in DEFAULT_STAT_METRICS:
@@ -293,7 +293,7 @@ def slowlog_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     max/avg/med/p95/p99 + bool sums + worst-execution example). The
     oracle recomputes the battery over the committed golden IR; the
     example tiebreak is the content-deterministic one (pipeline.py
-    class_agg_exprs docstring)."""
+    _battery docstring)."""
     classes = ingest_slowlog(spark, FIXTURE_LOG, example_tiebreak="query")
     return _driver_battery(classes)
 

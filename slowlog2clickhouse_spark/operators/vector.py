@@ -825,8 +825,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ground truth is the one brute-force pass you run on a
     SAMPLE of probes (here: the 20-probe panel); the ANN variants are
-    the production path. At 100 TB recall evaluation stays this exact
-    shape — fixed probe panel, broadcast probes, corpus never shuffles.
+    the production path. The corpus is assumed bounded: the truth
+    arm's top-3 is a ``collect_list`` aggregate, so each probe's group
+    buffers one entry per corpus candidate (O(|corpus|) memory per
+    probe, not the O(k) of a windowed top-k). An unbounded corpus
+    needs the window (WindowGroupLimit) back for the truth arm.
 
     Measured at sf0.01: IVF(nprobe=4) ≈ 0.65, default
     LSH(5 planes, multi-probe) = 0.40, LSH(8 planes, multi-probe)

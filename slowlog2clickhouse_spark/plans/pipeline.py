@@ -14,9 +14,11 @@ volume is |classes × periods|, not |events| (the same pre-aggregation
 property the reference gets from its in-memory map, but distributed).
 
 100 TB notes:
- * exact median/p95/p99 buffer per-group values; `percentiles='approx'`
-   switches to approx_percentile (t-digest-style sketch) for scale —
-   exact is kept as the oracle-checked default at test SF.
+ * exact median/p95/p99 buffer per-group values, ONE buffer per
+   metric for all three quantiles (`percentile(m, array(...))`);
+   `percentiles='approx'` switches to approx_percentile (a quantile
+   sketch) for scale — exact is kept as the oracle-checked default at
+   test SF.
  * the sink partitions by period_date (mirrors MergeTree
    `PARTITION BY toDate(period_start)` — README DDL [R:M]) and sorts
    within partitions by (digest, period_start) (mirrors the MergeTree
@@ -30,8 +32,6 @@ from pyspark.sql import functions as F
 
 from slowlog2clickhouse_spark.sources.slowlog import (
     BOOL_METRICS,
-    NUMBER_METRICS,
-    TIME_METRICS,
     parse_slowlog,
 )
 
@@ -46,68 +46,109 @@ DEFAULT_STAT_METRICS = (
 )
 
 
-def class_agg_exprs(
-    metrics=DEFAULT_STAT_METRICS,
-    bools=BOOL_METRICS,
-    percentiles: str = "exact",
-    example_tiebreak: str = "record_no",
-) -> list:
-    """The per-class stat battery ([go-mysql] event/metrics.go [R:H]).
+_PERIOD_S = {"minute": 60, "hour": 3600, "day": 86400}
+_PERCENTILE_FN = {"exact": "percentile", "approx": "approx_percentile"}
+# one percentile buffer per metric answers all three quantiles
+_QUANTILES = ("med", "p95", "p99")
+_QUANTILE_ARRAY = "array(0.5, 0.95, 0.99)"
+
+
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for the battery's SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _battery(
+    events: DataFrame,
+    per_class: bool,
+    period: str,
+    metrics,
+    percentiles: str,
+    example_tiebreak: str,
+) -> DataFrame:
+    """The per-class stat battery ([go-mysql] event/metrics.go [R:H])
+    as ONE SQL aggregate: per (digest, period) when ``per_class``,
+    else per period with digest/fingerprint pinned to ``GLOBAL``.
 
     ``example_tiebreak``: the worst-execution pick on a query_time tie.
     ``record_no`` mirrors the reference (last-read wins within a batch);
     ``query`` is a content-deterministic tiebreak independent of read
     order/partitioning — the driver-facing ops use it so the class row
     hashes identically against a SQL oracle on any executor layout.
+
+    The text is built from the metric names (backtick-quoted) and from
+    fixed dict lookups of ``period``/``percentiles``/``example_tiebreak``,
+    so no caller text reaches the SQL unquoted. Text, because the
+    whole battery then costs one ``spark.sql`` call, where Column
+    objects cost hundreds of py4j round trips before any job starts;
+    the call drops its temp view before it returns.
     """
+    period_len = _PERIOD_S[period]
+    pct = _PERCENTILE_FN[percentiles]
     tb = {"record_no": "record_no", "query": "query"}[example_tiebreak]
-    aggs = [
-        F.count("*").alias("num_queries"),
-        F.min("fingerprint").alias("fingerprint"),
-        F.min("db").alias("db"),
-        F.min("user").alias("user"),
-        F.min("host").alias("host"),
-        # example = query text of the worst execution (max query_time,
-        # record_no tiebreak) — event/class.go example logic [R:H]
-        F.expr(f"max_by(query, struct(query_time, {tb}))").alias("example"),
-        # labels: the qan-api2 D5 nested k/v column — the unrecognized
-        # `# Key: value` pairs of the class's worst execution ride along
-        # to the sink as map<string,string>
-        F.expr(f"max_by(extra_metrics, struct(query_time, {tb}))").alias("labels"),
+    # example = query text of the worst execution (max query_time,
+    # tiebreak) — event/class.go example logic [R:H]; labels: the
+    # qan-api2 D5 nested k/v column — the unrecognized `# Key: value`
+    # pairs of the class's worst execution ride along to the sink
+    worst = f"struct(query_time, {tb})"
+    # `outer` lists the output columns in order over `inner`, the
+    # aggregate; the global row pins the per-class dims digest and
+    # fingerprint (its unused min(fingerprint) is pruned)
+    dims = ["digest"] if per_class else []
+    bucket = f"date_trunc('{period}', ts)"
+    inner = dims + [
+        f"{bucket} AS period_start",
+        "count(*) AS num_queries",
+        "min(fingerprint) AS fingerprint",
+        "min(db) AS db",
+        "min(`user`) AS `user`",
+        "min(host) AS host",
+        f"max_by(query, {worst}) AS example",
+        f"max_by(extra_metrics, {worst}) AS labels",
         # Percona Log_slow_rate_limit upscaling: with rate_type='query'
         # only 1/N sessions are logged, so each logged event stands for
         # rate_limit executions ([go-mysql] log/log.go RateType/RateLimit)
-        F.sum(
-            F.when(
-                (F.col("rate_type") == "query") & (F.col("rate_limit") > 1),
-                F.col("rate_limit"),
-            ).otherwise(F.lit(1))
-        ).alias("num_queries_scaled"),
+        "sum(CASE WHEN rate_type = 'query' AND rate_limit > 1"
+        " THEN rate_limit ELSE 1 END) AS num_queries_scaled",
+    ]
+    outer = dims + [
+        "period_start",
+        "num_queries",
+        "fingerprint" if per_class else "'GLOBAL' AS fingerprint",
+        "db", "`user`", "host", "example", "labels", "num_queries_scaled",
     ]
     for m in metrics:
-        col = F.col(m)
-        aggs += [
-            F.count(col).alias(f"m_{m}_cnt"),
-            F.sum(col).alias(f"m_{m}_sum"),
-            F.min(col).alias(f"m_{m}_min"),
-            F.max(col).alias(f"m_{m}_max"),
-            (F.sum(col) / F.count(col)).alias(f"m_{m}_avg"),
+        c, name = _q(m), f"m_{m}_"
+        inner += [
+            f"count({c}) AS {_q(name + 'cnt')}",
+            f"sum({c}) AS {_q(name + 'sum')}",
+            f"min({c}) AS {_q(name + 'min')}",
+            f"max({c}) AS {_q(name + 'max')}",
+            f"sum({c}) / count({c}) AS {_q(name + 'avg')}",
+            # exact buffers every value; approx is the bounded-memory
+            # sketch for scale — either way ONE buffer per metric
+            f"{pct}({c}, {_QUANTILE_ARRAY}) AS {_q(name + 'pct')}",
         ]
-        if percentiles == "exact":
-            aggs += [
-                F.expr(f"percentile({m}, 0.5)").alias(f"m_{m}_med"),
-                F.expr(f"percentile({m}, 0.95)").alias(f"m_{m}_p95"),
-                F.expr(f"percentile({m}, 0.99)").alias(f"m_{m}_p99"),
-            ]
-        else:  # sketch-based, bounded memory per group — the 100 TB path
-            aggs += [
-                F.expr(f"approx_percentile({m}, 0.5)").alias(f"m_{m}_med"),
-                F.expr(f"approx_percentile({m}, 0.95)").alias(f"m_{m}_p95"),
-                F.expr(f"approx_percentile({m}, 0.99)").alias(f"m_{m}_p99"),
-            ]
-    for b in bools:
-        aggs.append(F.sum(F.col(b).cast("long")).alias(f"{b}_sum"))
-    return aggs
+        outer += [_q(name + s) for s in ("cnt", "sum", "min", "max", "avg")]
+        outer += [
+            f"{_q(name + 'pct')}[{i}] AS {_q(name + s)}"
+            for i, s in enumerate(_QUANTILES)
+        ]
+    for b in BOOL_METRICS:
+        inner.append(f"sum(CAST({_q(b)} AS BIGINT)) AS {_q(b + '_sum')}")
+        outer.append(_q(b + "_sum"))
+    if not per_class:
+        outer.append("'GLOBAL' AS digest")
+    outer.append(f"CAST({period_len} AS BIGINT) AS period_length")
+    sep = ",\n  "
+    # admin-command skip (main.go:~140 [R:M]); unparseable records
+    # (null query) carry no class information either
+    sql = (
+        f"SELECT {sep.join(outer)}\nFROM (SELECT {sep.join(inner)}\n"
+        "FROM {events} WHERE NOT admin AND query IS NOT NULL\n"
+        f"GROUP BY {', '.join(dims + [bucket])})"
+    )
+    return events.sparkSession.sql(sql, events=events)
 
 
 def aggregate_classes(
@@ -118,24 +159,7 @@ def aggregate_classes(
     example_tiebreak: str = "record_no",
 ) -> DataFrame:
     """events (+fingerprint/digest) → one row per (digest, period)."""
-    period_len = {"minute": 60, "hour": 3600, "day": 86400}[period]
-    return (
-        # admin-command skip (main.go:~140 [R:M]); unparseable records
-        # (null query) carry no class information either
-        events.where(~F.col("admin") & F.col("query").isNotNull())
-        .groupBy(
-            F.col("digest"),
-            F.date_trunc(period, F.col("ts")).alias("period_start"),
-        )
-        .agg(
-            *class_agg_exprs(
-                metrics=metrics,
-                percentiles=percentiles,
-                example_tiebreak=example_tiebreak,
-            )
-        )
-        .withColumn("period_length", F.lit(period_len).cast("long"))
-    )
+    return _battery(events, True, period, metrics, percentiles, example_tiebreak)
 
 
 def aggregate_global(
@@ -150,24 +174,7 @@ def aggregate_global(
     battery, grouped by period only, digest/fingerprint pinned to the
     GLOBAL sentinel. Partial aggregation makes this a second cheap pass
     over the same shuffle keyspace (|periods| rows out)."""
-    period_len = {"minute": 60, "hour": 3600, "day": 86400}[period]
-    exprs = [
-        e
-        for e in class_agg_exprs(
-            metrics=metrics,
-            percentiles=percentiles,
-            example_tiebreak=example_tiebreak,
-        )
-        # fingerprint/db/user/host are per-class dims; meaningless globally
-    ]
-    return (
-        events.where(~F.col("admin") & F.col("query").isNotNull())
-        .groupBy(F.date_trunc(period, F.col("ts")).alias("period_start"))
-        .agg(*exprs)
-        .withColumn("digest", F.lit("GLOBAL"))
-        .withColumn("fingerprint", F.lit("GLOBAL"))
-        .withColumn("period_length", F.lit(period_len).cast("long"))
-    )
+    return _battery(events, False, period, metrics, percentiles, example_tiebreak)
 
 
 def ingest_slowlog(

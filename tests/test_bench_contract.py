@@ -130,6 +130,31 @@ def test_steal_retry_keeps_lower_steal_attempt(monkeypatch):
     assert retried == ["q_x"]
 
 
+def test_steal_retry_keeps_measured_attempt_over_unmeasured_retry(monkeypatch):
+    """A retry whose steal window could not be measured (None) must
+    not replace the measured attempt: the kept times are the first
+    attempt's and the query still carries its steal stamp."""
+    calls = {"n": 0}
+    timings = [[9.0, 9.0], [1.0, 1.0]]
+    steal_windows = [30.0, None]
+
+    def fake_time_df(spark, build, runs=3):
+        calls["n"] += 1
+        return timings[calls["n"] - 1]
+
+    snaps = iter([0, 1, 2, 3])
+    monkeypatch.setattr(bench, "time_df", fake_time_df)
+    monkeypatch.setattr(bench, "cpu_steal_snapshot", lambda: next(snaps))
+    monkeypatch.setattr(bench, "cpu_steal_pct", lambda a, b: steal_windows[a // 2])
+    monkeypatch.setattr(bench, "wait_for_idle", lambda **kw: 0.0)
+    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
+    loads, steals, retried = {}, {}, []
+    ts = bench.guarded_time_df(None, None, 2, loads, "q_z", steals, retried)
+    assert calls["n"] == 2 and retried == ["q_z"]
+    assert ts == [9.0, 9.0]
+    assert steals["q_z"] == 30.0
+
+
 def test_steal_retry_skipped_when_clean(monkeypatch):
     calls = {"n": 0}
 

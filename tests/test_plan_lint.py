@@ -336,6 +336,63 @@ def test_ingest_slowlog_fingerprints_in_the_parse_pass(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
+def _n_percentile_buffers(df) -> int:
+    """Exact/approx percentile aggregate functions in the executed
+    plan's partial aggregate, printed untruncated."""
+    key = "spark.sql.debug.maxToStringFields"
+    old = df.sparkSession.conf.get(key)
+    df.sparkSession.conf.set(key, "1000")
+    try:
+        p = _executed_plan(df)
+    finally:
+        df.sparkSession.conf.set(key, old)
+    return p.count("partial_percentile(") + p.count("partial_approx_percentile(")
+
+
+def test_ingest_battery_has_one_percentile_buffer_per_metric(spark):
+    """One percentile aggregate per metric answers med/p95/p99 (the
+    Column-API battery ran three, 15 in all), and the parse still runs
+    once."""
+    from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
+    from slowlog2clickhouse_spark.plans.pipeline import (
+        DEFAULT_STAT_METRICS,
+        ingest_slowlog,
+    )
+
+    for percentiles in ("exact", "approx"):
+        df = ingest_slowlog(spark, FIXTURE_LOG, percentiles=percentiles)
+        df.collect()
+        assert _n_percentile_buffers(df) == len(DEFAULT_STAT_METRICS)
+        assert _executed_plan(df).count("MapInPandas") == 1
+
+
+def test_global_rollup_uses_the_class_battery(spark, monkeypatch):
+    """`aggregate_global` and `aggregate_classes` build one battery
+    (same builder, same buffers), differing only in the grouping."""
+    from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
+    from slowlog2clickhouse_spark.plans import pipeline
+
+    calls = []
+    battery = pipeline._battery
+
+    def spy(events, per_class, *a):
+        calls.append(per_class)
+        return battery(events, per_class, *a)
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    monkeypatch.setattr(pipeline, "_battery", spy)
+    events = pipeline.parse_slowlog(spark, FIXTURE_LOG)
+    views = temp_views()
+    g = pipeline.aggregate_global(events)
+    pipeline.aggregate_classes(events)
+    assert calls == [False, True]
+    assert temp_views() == views  # the battery's view is dropped again
+    g.collect()
+    assert _n_percentile_buffers(g) == len(pipeline.DEFAULT_STAT_METRICS)
+
+
 def test_cli_digest_parses_the_log_once(spark, monkeypatch, capsys):
     """`digest` prints totals and the top-K from ONE job over ONE
     parse: its totals are observed on the class rows it ranks."""

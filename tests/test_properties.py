@@ -6,6 +6,7 @@ explore far more of the input space than the golden tables."""
 
 from __future__ import annotations
 
+import re
 import string
 
 from hypothesis import given, settings
@@ -324,6 +325,105 @@ def test_state_machine_total_and_idempotent_on_unicode(q):
     # idempotence on its own output (the r9 chain property, now pinned
     # for the multibyte routing target too)
     assert fingerprint_py(fingerprint_py(q)) == fingerprint_py(q), repr(q)
+
+
+def _fingerprint_per_char(query):
+    """The state machine as it was before plain-ASCII runs were copied
+    in one step: every character takes the loop. Kept here as the
+    reference the fast path must match character for character."""
+    from slowlog2clickhouse_spark.functions import fingerprint as fpm
+
+    if query is None:
+        return None
+    out = []
+    i, n = 0, len(query)
+    while i < n:
+        ch = query[i]
+        if ch in ("'", '"'):
+            quote = ch
+            i += 1
+            while i < n:
+                if query[i] == "\\" and i + 1 < n:
+                    i += 2
+                    continue
+                if query[i] == quote:
+                    if i + 1 < n and query[i + 1] == quote:
+                        i += 2
+                        continue
+                    i += 1
+                    break
+                i += 1
+            out.append("?")
+            continue
+        if ch == "#" or (ch == "-" and query[i : i + 2] == "--"):
+            while i < n and query[i] != "\n":
+                i += 1
+            out.append(" ")
+            continue
+        if ch == "/" and query[i : i + 2] == "/*" and query[i : i + 3] != "/*!":
+            end = query.find("*/", i + 2)
+            i = n if end < 0 else end + 2
+            out.append(" ")
+            continue
+        if ch in "0123456789":
+            j = i
+            while j < n and (fpm._ascii_alnum(query[j]) or query[j] == "."):
+                j += 1
+            if (
+                j < n
+                and query[j] in "+-"
+                and query[j - 1] in "eE"
+                and j + 1 < n
+                and query[j + 1] in "0123456789"
+            ):
+                j += 1
+                while j < n and query[j] in "0123456789":
+                    j += 1
+            tok = query[i:j]
+            prev = out[-1] if out else ""
+            if (not prev or not (fpm._ascii_alnum(prev) or prev == "_")) and (
+                fpm._NUM_RE.match(tok) or fpm._HEX_RE.match(tok) or fpm._BIN_RE.match(tok)
+            ):
+                out.append("?")
+                i = j
+                continue
+            out.append(ch)
+            i += 1
+            continue
+        out.append(ch.lower())
+        i += 1
+    s = "".join(out)
+    s = fpm._IN_RE.sub("in(?+)", s)
+    s = fpm._VALUES_RE.sub("values(?+)", s)
+    return re.sub(r"\s+", " ", s, flags=re.ASCII).strip(" ")
+
+
+# every branch boundary of the state machine: quotes and escapes,
+# comment openers, numbers in all their shapes, ASCII whitespace vs
+# NBSP, and non-ASCII letters whose lower-casing is special (final
+# sigma, dotted capital I -> two code points, CJK, Kelvin sign -> 'k')
+_fp_atom = st.one_of(
+    st.sampled_from(
+        [
+            "'", '"', "\\", "''", "#", "--", "-", "/", "/*", "/*!", "*/", "*",
+            "0", "7", "42", "3.5", "1.", ".5", "e", "E", "e+", "E-", "0x",
+            "0X1f", "0b", "0b101", "_", "t1", "\u00a0", "\u03a3", "\u0130",
+            "\u8868", "\u212a", " ", "\n", "\t", "SELECT", "Col", "IN (",
+            "VALUES (", ",", "(", ")", "?", "=",
+        ]
+    ),
+    st.text(
+        alphabet=string.ascii_letters + string.digits + " '\"\\#-/*!.+_\n"
+        "\u00a0\u03a3\u0130\u8868",
+        max_size=6,
+    ),
+)
+
+
+@given(st.lists(_fp_atom, max_size=30).map("".join))
+@settings(max_examples=2000, deadline=None)
+def test_fingerprint_fast_path_matches_per_char_loop(q):
+    assert fingerprint_py(q) == _fingerprint_per_char(q), repr(q)
 
 
 # ---------------------------------------------------------------------------

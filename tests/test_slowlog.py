@@ -98,6 +98,29 @@ class TestParseRecord:
         ev = parse_record(rec)
         assert ev["query"] == "SELECT a\nFROM b\nWHERE c = 1"
 
+    @pytest.mark.parametrize(
+        "log", ["slowlog_small.log", "slowlog_mixed_versions.log"]
+    )
+    def test_log_key_spellings_hit_the_exact_table(self, log):
+        """Every `# Key:` spelling the parser recognizes in a real-style
+        log is a direct `_KNOWN_EXACT` hit, not a `.lower()` fallback
+        (Percona writes 'Query_time', 'Rows_examined', not
+        'Query_Time'). Only the deliberately unknown key misses."""
+        from slowlog2clickhouse_spark.sources.slowlog import _KNOWN_EXACT, _KV_RE
+
+        keys = set()
+        with open(os.path.join(os.path.dirname(FIXTURE_LOG), log)) as f:
+            for line in f:
+                body = line.lstrip("#").strip()
+                if line.startswith("#") and not body.startswith(
+                    ("Time:", "User@Host:", "administrator command:")
+                ):
+                    keys.update(k for k, _ in _KV_RE.findall(body))
+        recognized = {k for k in keys if _KNOWN_EXACT.get(k.lower())}
+        assert sorted(k for k in recognized if k not in _KNOWN_EXACT) == []
+        assert len(recognized) >= 24
+        assert keys - recognized <= {"Custom_metric"}
+
 
 FIXTURE_DIR = os.path.dirname(FIXTURE_LOG)
 
