@@ -330,6 +330,20 @@ def cmd_tail(args) -> int:
     return 0
 
 
+def _write_counted(df, out: str) -> int:
+    """Overwrite ``out`` with ``df`` as parquet; the row count rides on
+    the write job itself (an Observation), so nothing is re-run or
+    re-read to count it."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    written = Observation("written")
+    df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(out)
+    return written.get["rows"]
+
+
 def cmd_dedup(args) -> int:
     from slowlog2clickhouse_spark.registry import all_ops
 
@@ -339,9 +353,7 @@ def cmd_dedup(args) -> int:
         "keep_best": "dedup_keep_best",
     }[args.method]
     spark = _get_spark()
-    df = all_ops()[op_id].fn(spark, args.data_dir)
-    df.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
+    n = _write_counted(all_ops()[op_id].fn(spark, args.data_dir), args.out)
     print(f"{op_id}: wrote {n} rows -> {args.out}")
     return 0
 
@@ -351,9 +363,8 @@ def cmd_curate(args) -> int:
 
     spark = _get_spark()
     ops = all_ops()
-    report = ops["corpus_curation"].fn(spark, args.data_dir)
-    report.write.mode("overwrite").parquet(args.out)
-    print(f"corpus_curation: wrote {report.count()} rows -> {args.out}")
+    n = _write_counted(ops["corpus_curation"].fn(spark, args.data_dir), args.out)
+    print(f"corpus_curation: wrote {n} rows -> {args.out}")
     for r in ops["llm_curation_funnel"].fn(spark, args.data_dir).collect():
         print(f"  funnel {r['stage']}: {r['n']}")
     return 0

@@ -19,9 +19,13 @@ Three implementations, and where each is used:
 * :func:`fingerprint_col` — a chain of built-in ``regexp_replace``
   Columns, JVM-side and codegen'd. Covers the common grammar;
   documented edge cases (escaped quotes, nested comments) differ from
-  the state machine. Used by the registry ops whose oracles recompute
-  it, by ``routed_fingerprint`` for unflagged rows, and by
-  ``with_fingerprint`` (modes ``chain`` and ``routed``).
+  the state machine. Used by the ``fn_fingerprint*`` registry ops
+  (checked against its DuckDB mirror, measured against the state
+  machine), by ``routed_fingerprint`` for
+  unflagged rows, and by ``sources.slowlog.with_fingerprint`` (modes
+  ``chain`` and ``routed``), which only ``slowlog_classes_routed``,
+  the golden generator (the golden IR's chain columns) and
+  perfbench's traced chain/routed timings call.
 * :func:`fingerprint_duckdb` — the same chain rendered as DuckDB SQL,
   the correctness oracle for the Spark chain.
 """

@@ -58,7 +58,6 @@ def sink_jdbc_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         NUMBER_METRICS,
         TIME_METRICS,
         parse_slowlog,
-        with_fingerprint,
     )
 
     classes = ingest_slowlog(spark, FIXTURE_LOG)
@@ -70,7 +69,7 @@ def sink_jdbc_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         qt_hist_bucket,
     )
 
-    ev = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    ev = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin"))
         & F.col("query").isNotNull()
         & F.col("query_time").isNotNull()

@@ -37,9 +37,10 @@ from slowlog2clickhouse_spark.registry import op
 from slowlog2clickhouse_spark.sources.slowlog import (
     BOOL_METRICS,
     EVENT_SCHEMA,
-    parse_record,
+    parse_record_bytes,
     parse_slowlog,
     read_slowlog_records,
+    with_fingerprint,
 )
 
 _REPO_ROOT = os.path.dirname(
@@ -59,6 +60,19 @@ _TMP = os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")  # per
 # the golden IR as a DuckDB table expression (absolute path: the driver
 # runs DuckDB wherever it likes; the parquet is committed in-repo)
 _GOLD = f"read_parquet('{GOLDEN_EVENTS}')"
+
+
+def _parser_classed(gold_expr: str) -> str:
+    """A golden IR with its state-machine class columns (``*_py``)
+    under the names the parser writes: the oracle input of an op that
+    keys on the parser's digest."""
+    return (
+        "(SELECT * REPLACE (fingerprint_py AS fingerprint, digest_py AS digest)"
+        f" FROM {gold_expr})"
+    )
+
+
+_GOLD_PY = _parser_classed(_GOLD)
 _LONG_METRICS = {"rows_sent", "rows_examined", "bytes_sent"}
 
 
@@ -151,7 +165,7 @@ def _driver_safe(events: DataFrame) -> DataFrame:
 # the parse-op oracle: the committed golden IR, column-for-column. The
 # parser fingerprints with the state machine, so its fingerprint/digest
 # are the golden's *_py columns (the golden's own fingerprint/digest
-# hold the chain's values, which the chain-based ops check against)
+# hold the regexp chain's values)
 _GOLDEN_AS = {
     "extra_metrics": "extra_metrics_json",
     "fingerprint": "fingerprint_py",
@@ -193,9 +207,9 @@ def udtf_parse_slowlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @udtf(returnType=EVENT_SCHEMA)
     class ParseSlowlog:
-        def eval(self, rec: str):
+        def eval(self, rec: bytes):
             if rec and rec.strip():
-                d = parse_record(rec)
+                d = parse_record_bytes(rec, 0)
                 if d is not None:  # pure-preamble chunk → no event
                     yield tuple(d[f.name] for f in EVENT_SCHEMA.fields)
 
@@ -204,7 +218,8 @@ def udtf_parse_slowlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     records.createOrReplaceTempView("slowlog_records")
     return _driver_safe(
         spark.sql(
-            "SELECT t.* FROM slowlog_records r, LATERAL parse_slowlog_udtf(r.value) t"
+            "SELECT t.* FROM slowlog_records r,"
+            " LATERAL parse_slowlog_udtf(CAST(r.value AS BINARY)) t"
         )
     )
 
@@ -325,9 +340,8 @@ def slowlog_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-period stat battery beside the per-class rows — one GLOBAL
     row per minute over the fixture log."""
     from slowlog2clickhouse_spark.plans.pipeline import aggregate_global
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
 
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG))
+    events = parse_slowlog(spark, FIXTURE_LOG)
     return _driver_battery(aggregate_global(events, example_tiebreak="query"))
 
 
@@ -619,7 +633,7 @@ def qan_filter_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ev AS (
       SELECT digest, date_trunc('minute', ts) AS period_start
-      FROM {_GOLD} WHERE NOT admin AND query IS NOT NULL),
+      FROM {_GOLD_PY} WHERE NOT admin AND query IS NOT NULL),
     dp AS (SELECT DISTINCT digest, period_start FROM ev),
     f AS (SELECT digest, min(period_start) AS first_seen FROM dp GROUP BY 1)
     SELECT period_start, count(*) AS n_digests,
@@ -638,9 +652,7 @@ def qan_new_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse as the class pipeline; first-seen is a |digests|-row
     aggregate that broadcasts back. No raw-event row crosses a second
     shuffle."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     dp = events.select(
@@ -684,7 +696,7 @@ def qan_new_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(coalesce(sum(lock_time), 0), 6)
              / greatest(round(coalesce(sum(query_time), 0), 6), 1e-9)
              AS lock_share
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1
     """,
@@ -702,9 +714,7 @@ def slowlog_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream — identical shuffle shape to slowlog_classes; every
     metric is an int or round-recovered decimal sum, ratios computed
     once post-aggregation."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     lock_sum = F.round(F.coalesce(F.sum("lock_time"), F.lit(0.0)), 6)
@@ -734,7 +744,7 @@ def slowlog_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT digest, user, host, db,
            cast(count(*) AS BIGINT) AS cnt,
            round(coalesce(sum(query_time), 0), 6) AS query_time_sum
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1, 2, 3, 4
     """,
@@ -752,9 +762,7 @@ def slowlog_dimensions_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix costs no more than the per-digest rollup. Cardinality =
     |digests × active principals|, orders of magnitude below raw
     events."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     return events.groupBy("digest", "user", "host", "db").agg(
@@ -776,7 +784,7 @@ def slowlog_dimensions_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT digest,
              cast(count(*) AS BIGINT) AS cnt,
              round(coalesce(sum(query_time), 0), 6) AS qt_sum
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL
       GROUP BY 1),
     tot AS (SELECT round(sum(qt_sum), 6) AS grand FROM per)
@@ -798,9 +806,7 @@ def slowlog_load_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |digests| post-agg rows."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     per = events.groupBy("digest").agg(
@@ -836,7 +842,7 @@ def slowlog_load_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY digest
                ORDER BY query_time DESC NULLS LAST, query DESC) AS INTEGER)
                AS rk
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL) t
     WHERE rk <= 2
     """,
@@ -853,9 +859,7 @@ def qan_digest_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle rows, not the raw event stream."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     w = W.partitionBy("digest").orderBy(
@@ -884,6 +888,7 @@ _GOLD_RATE = (
     )
     + "')"
 )
+_GOLD_RATE_PY = _parser_classed(_GOLD_RATE)
 
 
 @op(
@@ -899,7 +904,7 @@ _GOLD_RATE = (
            round(coalesce(sum(query_time), 0), 6) AS qt_logged,
            round(coalesce(sum(query_time), 0), 6)
              * coalesce(max(rate_limit), 1) AS qt_estimated
-    FROM {_GOLD_RATE}
+    FROM {_GOLD_RATE_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1
     """,
@@ -917,11 +922,9 @@ def slowlog_rate_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowlog_classes; the multiplier rides the aggregate as
     max(rate_limit) per class (a class is logged under one sampling
     config at a time)."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(
-        parse_slowlog(spark, FIXTURE_RATELIMIT_LOG)
-    ).where((~F.col("admin")) & F.col("query").isNotNull())
+    events = parse_slowlog(spark, FIXTURE_RATELIMIT_LOG).where(
+        (~F.col("admin")) & F.col("query").isNotNull()
+    )
     rl = F.coalesce(F.max("rate_limit"), F.lit(1))
     qt = F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6)
     return events.groupBy("digest").agg(
@@ -943,7 +946,7 @@ def slowlog_rate_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT lower(regexp_extract(fingerprint,
                    'from ([a-z0-9_]+)', 1)) AS table_name,
              query_time
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL),
     per AS (
       SELECT table_name,
@@ -974,9 +977,7 @@ def slowlog_top_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan shape."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     tbl = F.lower(
@@ -1012,7 +1013,7 @@ def slowlog_top_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH dm AS (
       SELECT DISTINCT digest, date_trunc('minute', ts) AS m
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL AND ts IS NOT NULL),
     pairs AS (
       SELECT a.digest AS digest_a, b.digest AS digest_b,
@@ -1039,9 +1040,7 @@ def qan_digest_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     size bounds basket_part_pairs. Top-20 over the tiny pair table."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin"))
         & F.col("query").isNotNull()
         & F.col("ts").isNotNull()
@@ -1087,7 +1086,7 @@ def qan_digest_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AS BIGINT) AS n_sat,
              cast(sum(CASE WHEN query_time > 0.1 AND query_time <= 0.4
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_tol
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL
       GROUP BY 1),
     tot AS (SELECT round(sum(qt_sum), 6) AS grand FROM per)
@@ -1119,9 +1118,7 @@ def qan_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses once."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     sat = (F.col("query_time") <= 0.1).cast("long")
@@ -1185,7 +1182,7 @@ _WORKLOAD_TOK_SQL = _WORKLOAD_TOK_PAT.replace("'", "''")
              list_filter(regexp_extract_all(query, '{_WORKLOAD_TOK_SQL}'),
                x -> NOT (starts_with(x, '--') OR starts_with(x, '#')
                          OR starts_with(x, '/*'))) AS ls
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL)
     SELECT digest,
            min(fingerprint) AS template,
@@ -1226,9 +1223,7 @@ def qan_workload_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable subset both engines split identically, verified
     list-for-list), one digest-keyed partial-agg'd shuffle. The ratio
     is bigint/bigint scalar division — IEEE-deterministic, unrounded."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     toks = F.regexp_extract_all("query", F.lit(_WORKLOAD_TOK_PAT), F.lit(0))
@@ -1271,7 +1266,7 @@ def qan_workload_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT digest, query_time,
              (CAST(('0x' || substr(md5(query || CAST(ts AS VARCHAR)), 1, 4))
                    AS BIGINT) % 10 = 0) AS kept
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL),
     per AS (
       SELECT digest,
@@ -1309,9 +1304,7 @@ def qan_workload_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state), one digest-keyed partial-agg'd shuffle, one 1-row grand-
     total broadcast. The sample RATE generalizes by widening the hash
     modulus; stratified-exact sampling lives in sample_stratified."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     hk = F.conv(
@@ -1359,7 +1352,7 @@ def qan_workload_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(coalesce(sum(query_time), 0), 6) AS qt_sum,
            min(query_time) AS qt_min,
            max(query_time) AS qt_max
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1
     """,
@@ -1386,9 +1379,7 @@ def slowlog_classes_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two digest-keyed partial-agg shuffles + one digest
     equi-join — in production the left side is a parquet/ClickHouse
     read of stored partials, not a recompute."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin")) & F.col("query").isNotNull()
     )
     half = (
@@ -1486,7 +1477,7 @@ def hist_quantiles(merged: DataFrame) -> DataFrame:
       SELECT digest,
              length(bin(greatest(
                CAST(floor(query_time * 1000000) AS BIGINT), 0))) AS bucket
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL AND query_time IS NOT NULL),
     h AS (SELECT digest, bucket, count(*) AS n FROM e GROUP BY 1, 2),
     c AS (SELECT digest, bucket, n,
@@ -1528,9 +1519,7 @@ def slowlog_classes_incremental_pctl(spark: SparkSession, sf_dir: str) -> DataFr
     an addition-keyed shuffle of that tiny table, never a rescan of
     history. Quantile extraction is one bounded window over ≤40 rows
     per digest."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin"))
         & F.col("query").isNotNull()
         & F.col("query_time").isNotNull()
@@ -1575,7 +1564,7 @@ def slowlog_classes_incremental_pctl(spark: SparkSession, sf_dir: str) -> DataFr
       SELECT digest, query_time,
              length(bin(greatest(
                CAST(floor(query_time * 1000000) AS BIGINT), 0))) AS bucket
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL AND query_time IS NOT NULL),
     r AS (
       SELECT digest, query_time,
@@ -1630,9 +1619,7 @@ def qan_pctl_hist_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the estimate side is the |digests × ≤40 buckets| histogram path."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    events = parse_slowlog(spark, FIXTURE_LOG).where(
         (~F.col("admin"))
         & F.col("query").isNotNull()
         & F.col("query_time").isNotNull()
@@ -1711,8 +1698,6 @@ def slowlog_classes_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14): the UDF's INPUT is masked to NULL for clean rows, so only
     flagged rows carry payload across the Python boundary,
     Arrow-batched, in one scan."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
     events = with_fingerprint(
         parse_slowlog(spark, FIXTURE_LOG), mode="routed"
     ).where((~F.col("admin")) & F.col("query").isNotNull())

@@ -9,14 +9,17 @@ goroutine and emits events over a channel, we
    record-header delimiter ``\\n# Time: `` (``spark.read.text`` with a
    custom ``lineSep`` — stays DataFrame-native, and file splits land on
    record boundaries so the scan parallelizes cleanly at 100 TB), then
-2. parse each record to a typed row inside an Arrow-batched
-   ``mapInPandas`` (regex-bound Python, ~one pass per record; no
-   driver-side loops, no RDDs). The same pass fingerprints the
-   statement with the state machine (``fingerprint_py``) and attaches
-   its ``fingerprint`` and ``digest``, as the reference's event loop
-   does, so every reader built on ``parse_record`` (this batch source,
-   the ``stream`` file source, the UDTF and the ``slowlog`` /
-   ``slowlog_tail_multi`` data sources) carries the same exact class.
+2. parse each record's raw bytes to a typed row inside an
+   Arrow-batched ``mapInPandas`` (regex-bound Python, ~one pass per
+   record; no driver-side loops, no RDDs), the one stage this batch
+   source and the ``stream`` file source share. The same pass
+   fingerprints the statement with the state machine
+   (``fingerprint_py``) and attaches its ``fingerprint`` and
+   ``digest``, as the reference's event loop does. Every reader (this
+   batch source, the ``stream`` file source, the UDTF and the
+   ``slowlog`` / ``slowlog_tail_multi`` data sources) turns bytes into
+   events through ``parse_record_bytes``: one UTF-8 policy, so a
+   record carries the same exact class on every path.
 
 Output schema follows FIXTURES.md §2 (the reference's ``log.Event``
 widened to typed nullable columns, with unrecognized ``# Key: value``
@@ -290,6 +293,17 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
     return ev
 
 
+def parse_record_bytes(raw: bytes, record_no: int | None) -> dict | None:
+    """One record's raw bytes → event dict (``parse_record``): the one
+    place slow-log bytes become text, so every reader applies the same
+    UTF-8 policy. Real logs carry binary inside statements (blob
+    inserts, truncated multibyte characters); each maximal invalid
+    sequence becomes U+FFFD (Python's ``"replace"`` handler), the
+    statement is fingerprinted from that text, and a record lands in
+    the same class through ``ingest``, ``stream`` and ``tail``."""
+    return parse_record(raw.decode("utf-8", errors="replace"), record_no)
+
+
 def read_slowlog_records(spark: SparkSession, path: str) -> DataFrame:
     """Raw multi-line records, one row each (op: scan_text_multiline).
 
@@ -298,6 +312,32 @@ def read_slowlog_records(spark: SparkSession, path: str) -> DataFrame:
     the scan is parallel and needs no cross-partition stitching.
     """
     return spark.read.option("lineSep", RECORD_DELIM).text(path)
+
+
+def _parse_stage(records: DataFrame, record_no: str) -> DataFrame:
+    """The one parse stage of the batch and ``stream`` readers: text
+    records (``value``) plus the SQL expression ``record_no`` → a
+    ``mapInPandas`` over EVENT_SCHEMA. The text source keeps a record's
+    raw bytes and the BINARY cast hands them over the Arrow boundary
+    as they are in the file, for ``parse_record_bytes`` to decode."""
+
+    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            nos = pdf["record_no"]
+            # an all-NULL bigint column arrives as float64 NaN
+            nos = nos.astype(object).where(nos.notna(), None)
+            rows = [
+                ev
+                for rec, rno in zip(pdf["value"], nos)
+                if rec.strip() and (ev := parse_record_bytes(rec, rno)) is not None
+            ]
+            out = pd.DataFrame(rows, columns=[f.name for f in EVENT_SCHEMA.fields])
+            out["ts"] = pd.to_datetime(out["ts"])
+            yield out
+
+    return records.selectExpr(
+        "CAST(value AS BINARY) AS value", f"{record_no} AS record_no"
+    ).mapInPandas(chunk, EVENT_SCHEMA)
 
 
 def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
@@ -311,38 +351,20 @@ def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
     deterministic — a per-batch ``enumerate`` restarts at 0 in every
     Arrow batch and is neither.
     """
-    # real logs carry binary garbage inside statements (blob inserts,
-    # truncated multibyte chars); Spark's text source passes the raw
-    # bytes through, but the Arrow boundary into mapInPandas REQUIRES
-    # valid UTF-8 — the encode/decode round-trip substitutes U+FFFD
-    # JVM-side (documented divergence: the reference reads raw bytes).
-    # One projection stamps record_no and cleans the text.
-    raw = read_slowlog_records(spark, path).selectExpr(
-        "decode(encode(value, 'UTF-8'), 'UTF-8') AS value",
-        "monotonically_increasing_id() AS record_no",
+    return _parse_stage(
+        read_slowlog_records(spark, path), "monotonically_increasing_id()"
     )
-
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                ev
-                for rec, rno in zip(pdf["value"], pdf["record_no"])
-                if rec.strip() and (ev := parse_record(rec, int(rno))) is not None
-            ]
-            out = pd.DataFrame(rows, columns=[f.name for f in EVENT_SCHEMA.fields])
-            out["ts"] = pd.to_datetime(out["ts"])
-            yield out
-
-    return raw.mapInPandas(chunk, EVENT_SCHEMA)
 
 
 def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
     """Re-derive fingerprint + digest with a JVM-side path, replacing
     the exact values the parser already attached.
 
-    Product paths never call this: ``parse_record`` fingerprints every
-    event with the state machine. It exists for the registry ops whose
-    DuckDB oracles recompute the chain, and for measuring the chain.
+    Product paths and the registry ops keyed on classes never call
+    this: ``parse_record`` fingerprints every event with the state
+    machine. Its callers are ``slowlog_classes_routed`` (routing is
+    that op's subject), the golden generator (the golden IR's chain
+    columns) and perfbench's traced chain and routed timings.
 
     mode="chain"  — the codegen'd regexp_replace chain (what
                     ``fingerprint_duckdb`` mirrors; default).

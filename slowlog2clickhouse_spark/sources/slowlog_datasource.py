@@ -6,10 +6,13 @@ Python format plug into the planner like parquet/csv do:
     spark.dataSource.register(SlowlogDataSource)
     spark.read.format("slowlog").load("/var/log/mysql/slow*.log")
 
-This wraps the exact same ``parse_record`` state machine as the
-mapInPandas source (sources/slowlog.py) — one parser, two integration
-surfaces — and the pytest golden test pins that both produce identical
-events for the fixture corpus.
+Both formats split a file's bytes at the record boundary in
+``_parse_bytes`` and hand each record to ``parse_record_bytes``, the
+same decode-and-parse call as the mapInPandas stage of the batch and
+``stream`` readers (sources/slowlog.py), so every reader applies one
+UTF-8 policy and yields the same events; the pytest golden test pins
+this for the fixture corpus. ``record_no`` is the record's byte offset
+within its file.
 
 Scale: ``partitions()`` returns one InputPartition per input file, so a
 directory of rotated logs fans out across executors exactly like the
@@ -45,7 +48,6 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
-from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -55,20 +57,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-from slowlog2clickhouse_spark.sources.slowlog import EVENT_SCHEMA, parse_record
+from slowlog2clickhouse_spark.sources.slowlog import EVENT_SCHEMA, parse_record_bytes
 
 _FIELDS = [f.name for f in EVENT_SCHEMA.fields]
-
-
-def _records(text: str) -> Iterator[str]:
-    """Split a slow-log file into per-event chunks on the record
-    boundary marker, mirroring the lineSep-split reader: the first
-    chunk keeps any preamble (parse_record skips it), later chunks
-    start at their `# Time: ` value."""
-    parts = text.split("\n# Time: ")
-    yield parts[0]
-    for p in parts[1:]:
-        yield "# Time: " + p
 
 
 class SlowlogReader(DataSourceReader):
@@ -86,11 +77,7 @@ class SlowlogReader(DataSourceReader):
 
     def read(self, partition: InputPartition):
         with open(partition.value, "rb") as fh:
-            text = fh.read().decode("utf-8", errors="replace")
-        for i, rec in enumerate(_records(text)):
-            ev = parse_record(rec, i)
-            if ev is not None:
-                yield tuple(ev[name] for name in _FIELDS)
+            yield from _parse_bytes(fh.read(), 0)
 
 
 _BOUNDARY = b"\n# Time: "
@@ -570,20 +557,21 @@ MULTI_EVENT_SCHEMA = StructType(
 )
 
 
-def _parse_bytes(buf: bytes, base: int, path: str, inc: str = ""):
-    """Parse a byte range into event tuples. record_no is the record's
-    BYTE OFFSET within its file incarnation — derivable from the
-    partition alone (no cross-batch counter in the offsets), monotonic
-    per incarnation, and stable under replay. It RESETS on rotation —
-    ``inc`` (the incarnation head stamp, see MULTI_EVENT_SCHEMA)
-    disambiguates the reset."""
+def _parse_bytes(buf: bytes, base: int, provenance: tuple = ()):
+    """Split a byte range at the record boundary and parse each record
+    into an event tuple, ``provenance`` appended. record_no is the
+    record's BYTE OFFSET within its file incarnation — derivable from
+    the partition alone (no cross-batch counter in the offsets),
+    monotonic per incarnation, and stable under replay. It RESETS on
+    rotation — the tail reader's provenance (path, incarnation head
+    stamp, see MULTI_EVENT_SCHEMA) disambiguates the reset."""
     parts = buf.split(_BOUNDARY)
     cur = 0
     for i, part in enumerate(parts):
         rec = part if i == 0 else b"# Time: " + part
-        ev = parse_record(rec.decode("utf-8", errors="replace"), base + cur)
+        ev = parse_record_bytes(rec, base + cur)
         if ev is not None:
-            yield tuple(ev[name] for name in _FIELDS) + (path, inc)
+            yield tuple(ev[name] for name in _FIELDS) + provenance
         cur += len(rec) + 1  # +1: the \n the boundary split consumed
 
 
@@ -917,14 +905,14 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         if sib_buf:
             # salvage leg: bytes belong to the START incarnation
             inc = f"{v.get('sib_head', '')}@{int(v.get('sib_ino', 0))}"
-            yield from _parse_bytes(sib_buf, sib_base, v["path"], inc)
+            yield from _parse_bytes(sib_buf, sib_base, (v["path"], inc))
         if live_buf:
             # live leg: bytes belong to the END incarnation — which,
             # when the same-incarnation guard fired, is also the start
             # incarnation (stamps agree on this very handle); the end
             # stamp is the fresher (larger head_n) of the two either way
             inc = f"{v.get('head', '')}@{int(v.get('ino', 0))}"
-            yield from _parse_bytes(live_buf, live_base, v["path"], inc)
+            yield from _parse_bytes(live_buf, live_base, (v["path"], inc))
 
     def commit(self, end: dict) -> None:
         pass  # offsets carry everything; nothing to clean up

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from slowlog2clickhouse_spark.registry import op
-from slowlog2clickhouse_spark.sources.slowlog import (
-    EVENT_SCHEMA,
-    RECORD_DELIM,
-    parse_record,
-)
+from slowlog2clickhouse_spark.sources.slowlog import RECORD_DELIM, _parse_stage
 
 _counter = itertools.count()
 
@@ -117,35 +113,16 @@ def read_slowlog_stream(
     rotation segment)."""
     import os
 
-    import pandas as pd
-
     directory, glob = (path, "*") if os.path.isdir(path) else os.path.split(path)
     reader = spark.readStream.option("lineSep", RECORD_DELIM).option(
         "pathGlobFilter", glob
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.text(directory)
-    # UTF-8 sanitize before the Arrow boundary (see sources/slowlog.py)
-    raw = raw.withColumn("value", F.decode(F.encode("value", "UTF-8"), "UTF-8"))
-
-    def chunk(batches):
-        for pdf in batches:
-            # record_no stays NULL on the streaming path: a per-batch
-            # enumerate collides across micro-batches, and there is no
-            # stable global ordinal for an unbounded tail — downstream
-            # streaming aggs never key or tiebreak on it
-            rows = [
-                ev
-                for r in pdf["value"]
-                if r.strip() and (ev := parse_record(r)) is not None
-            ]
-            out = pd.DataFrame(rows, columns=[f.name for f in EVENT_SCHEMA.fields])
-            out["ts"] = pd.to_datetime(out["ts"])
-            out["record_no"] = None
-            yield out
-
-    return raw.mapInPandas(chunk, EVENT_SCHEMA)
+    # record_no stays NULL on the streaming path: there is no stable
+    # global ordinal for an unbounded tail, and downstream streaming
+    # aggs never key or tiebreak on it
+    return _parse_stage(reader.text(directory), "CAST(NULL AS BIGINT)")
 
 
 def stream_classes(events: DataFrame) -> DataFrame:

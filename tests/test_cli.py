@@ -112,7 +112,7 @@ def test_cli_stream_multi_drain_never_double_counts(spark, tmp_path):
     assert got.select("epoch").distinct().count() == 1
 
 
-def test_cli_dedup_keep_best(spark, sf_dir, tmp_path):
+def test_cli_dedup_keep_best(spark, sf_dir, tmp_path, capsys):
     out = str(tmp_path / "keep")
     rc = main(["dedup", "--data-dir", sf_dir, "--out", out])
     assert rc == 0
@@ -122,14 +122,18 @@ def test_cli_dedup_keep_best(spark, sf_dir, tmp_path):
     lib = all_ops()["dedup_keep_best"].fn(spark, sf_dir)
     assert got.count() == lib.count()
     assert set(got.columns) == set(lib.columns)
+    # the printed count is the written row count
+    assert f"wrote {got.count()} rows" in capsys.readouterr().out
 
 
 def test_cli_curate_report(spark, sf_dir, tmp_path, capsys):
     out = str(tmp_path / "report")
     rc = main(["curate", "--data-dir", sf_dir, "--out", out])
     assert rc == 0
-    assert spark.read.parquet(out).count() >= 1
+    n = spark.read.parquet(out).count()
+    assert n >= 1
     text = capsys.readouterr().out
+    assert f"corpus_curation: wrote {n} rows" in text
     assert "funnel" in text
 
 
@@ -148,14 +152,24 @@ _CLEAN = (
     "SELECT * FROM users WHERE id IN ({i}, {j}, 3)",
     "INSERT INTO log (a, b) VALUES ({i}, 'v{i}'), ({j}, 'w')",
 )
+# statements holding invalid UTF-8 outside string literals: a JVM-side
+# decode and Python's "replace" handler substitute different numbers
+# of U+FFFD for these, which puts the record in different classes
+_INVALID_UTF8 = (
+    b"SELECT c\xed\xa0\x80 FROM t WHERE id = 9",  # UTF-16 surrogate
+    b"SELECT \xc0\xaf FROM t WHERE id = 4",  # overlong '/'
+    b"SELECT id FROM t\xff WHERE id = 2",  # never-valid byte
+)
 
 
 def test_cli_paths_agree_on_exact_digests(spark, tmp_path):
     """One log through CLI `ingest`, `stream`, `tail` on the file and
     `tail` on its directory (one tail reader): every path yields the
     same (digest, num_queries) multiset, and each digest is the state
-    machine's — digest_py(fingerprint_py(query)). So `ingest` history
-    followed by `tail --from latest` never splits a query class."""
+    machine's — digest_py(fingerprint_py(query)), with invalid UTF-8
+    decoded by Python's "replace" handler on every path. So `ingest`
+    history followed by `tail --from latest` never splits a query
+    class."""
     from collections import Counter
 
     from slowlog2clickhouse_spark.functions.fingerprint import (
@@ -166,25 +180,29 @@ def test_cli_paths_agree_on_exact_digests(spark, tmp_path):
 
     # teeth: a chain-keyed path would split or merge these classes
     assert sum(fingerprint_chain_py(q) != fingerprint_py(q) for q in _CHAIN_DIVERGENT) >= 4
-    queries = [t.format(i=i, j=i + 1) for i in range(6) for t in _CLEAN]
-    queries += [q for q in _CHAIN_DIVERGENT for _ in range(2)]
+    queries = [t.format(i=i, j=i + 1).encode() for i in range(6) for t in _CLEAN]
+    queries += [q.encode() for q in _CHAIN_DIVERGENT for _ in range(2)]
+    queries += [q for q in _INVALID_UTF8 for _ in range(2)]
     logs = tmp_path / "logs"
     os.makedirs(logs)
     log = logs / "slow.log"
-    with open(log, "w", encoding="utf-8") as f:
+    with open(log, "wb") as f:
         for n, q in enumerate(queries):
             f.write(
-                f"# Time: 2024-01-01T00:{n // 60:02d}:{n % 60:02d}.000000Z\n"
-                "# User@Host: u[u] @ h []  Id: 1\n"
-                "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
-                f"{q};\n"
+                (
+                    f"# Time: 2024-01-01T00:{n // 60:02d}:{n % 60:02d}.000000Z\n"
+                    "# User@Host: u[u] @ h []  Id: 1\n"
+                    "# Query_time: 0.5  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
+                ).encode()
+                + q
+                + b";\n"
             )
         # header-only sentinel: flushes the last record out of the tail
         # readers' torn-record hold-back; it has no statement, no class
         f.write(
-            "# Time: 2030-01-01T00:00:00.000000Z\n"
-            "# Query_time: 0.000001  Lock_time: 0.000000 "
-            "Rows_sent: 0  Rows_examined: 0\n"
+            b"# Time: 2030-01-01T00:00:00.000000Z\n"
+            b"# Query_time: 0.000001  Lock_time: 0.000000 "
+            b"Rows_sent: 0  Rows_examined: 0\n"
         )
 
     runs = {
@@ -193,7 +211,9 @@ def test_cli_paths_agree_on_exact_digests(spark, tmp_path):
         "tail": ["tail", "--log", str(log)],
         "tail_fleet": ["tail", "--log", str(logs)],
     }
-    want = Counter(digest_py(fingerprint_py(q)) for q in queries)
+    want = Counter(
+        digest_py(fingerprint_py(q.decode("utf-8", "replace"))) for q in queries
+    )
     for name, argv in runs.items():
         out = str(tmp_path / f"out_{name}")
         if name != "ingest":

@@ -325,7 +325,9 @@ def _executed_plan(df) -> str:
 def test_ingest_slowlog_fingerprints_in_the_parse_pass(spark):
     """The parser fingerprints each event itself: the executed ingest
     plan holds ONE Python stage (the mapInPandas parser) and no
-    fingerprint UDF stage beside it."""
+    fingerprint UDF stage beside it. Record bytes reach that stage
+    undecoded — no JVM-side encode/decode round trip — so the parser
+    is the one place they become text."""
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
     from slowlog2clickhouse_spark.plans.pipeline import ingest_slowlog
 
@@ -334,6 +336,7 @@ def test_ingest_slowlog_fingerprints_in_the_parse_pass(spark):
     p = _executed_plan(df)
     assert p.count("MapInPandas") == 1
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    assert "encode(" not in p and "decode(" not in p
 
 
 def _n_percentile_buffers(df) -> int:

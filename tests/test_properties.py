@@ -137,18 +137,21 @@ def test_first_fit_decreasing_invariants(sizes, budget):
 )
 @settings(max_examples=200)
 def test_datasource_record_split_roundtrip(bodies):
-    """The Python-datasource splitter must produce exactly one chunk
-    per record and preserve every byte: joining N records with the
-    '\\n# Time: ' boundary and re-splitting yields the originals."""
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import _records
+    """The Python-datasource splitter must produce exactly one event
+    per record and account for every byte: joining N records with the
+    '\\n# Time: ' boundary and re-splitting yields one event per record,
+    stamped with the record's byte offset in the joined text."""
+    from slowlog2clickhouse_spark.sources.slowlog_datasource import _parse_bytes
 
     recs = [f"# Time: 2024-01-01T00:00:0{i % 10}Z\n{b}" for i, b in enumerate(bodies)]
     # a record body must not itself contain the boundary marker
     recs = [r for r in recs if "\n# Time: " not in r[8:]]
     text = "\n# Time: ".join(r[8:] if i else r for i, r in enumerate(recs))
-    got = list(_records(text))
-    assert len(got) == len(recs)
-    assert got == recs
+    offsets = [0]
+    for r in recs[:-1]:
+        offsets.append(offsets[-1] + len(r) + 1)
+    got = [ev[0] for ev in _parse_bytes(text.encode(), 0)]
+    assert got == offsets
 
 
 # ---------------------------------------------------------------------------
