@@ -10,9 +10,12 @@ result as two single-file parquets:
       record_no, which is a partition-layout artifact), plus
       * extra_metrics_json — to_json(extra_metrics) (map cells are
         unhashable for the driver's canonicalizer)
-      * fingerprint / digest — the production SQL-chain values
-      * fingerprint_py / digest_py — the Python-UDF grammar's values
-        (oracle for udf_fingerprint_py / pandas_udf_fingerprint)
+      * fingerprint / digest — the SQL regexp chain's values
+        (fingerprint_col / digest_col; no product path keys on them)
+      * fingerprint_py / digest_py — the state machine's values, the
+        ones the parser attaches to every event and every product
+        path and class oracle keys on (oracles read them through
+        operators/slowlog_ops._parser_classed)
   tests/fixtures/golden/slowlog_small_records.parquet
       one row per raw record: (record_len, head) — the lineSep record
       assembly contract (oracle for scan_text_multiline)

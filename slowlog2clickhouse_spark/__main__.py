@@ -27,13 +27,15 @@ total query time, printed to stdout, from one parse of the log.
 Every slow-log subcommand keys classes by the digest the parser
 computes with the state machine (sources/slowlog.parse_record), so
 `ingest`, `digest`, `stream` and `tail` agree digest for digest.
-`stream` = the same aggregation as an availableNow/continuous
-foreachBatch stream over a growing log directory. The sink is an
-idempotent FULL-STATE overwrite per micro-batch (complete output
-mode, epoch stamped as a column): a retried epoch rewrites identical
-content and a later drain supersedes an earlier one, so the output
-dir always holds exactly one consistent snapshot — never partial
-appends that double-count. Checkpointed, so restarts resume.
+`stream` (a directory of finished/rotated segments) and `tail` (growing
+files) run the same watermarked class aggregation through one runner,
+streaming/slowlog_stream.run_classes_stream. A drain (the default)
+writes an idempotent FULL-STATE overwrite per micro-batch (complete
+output mode, epoch stamped as a column): a retried epoch rewrites
+identical content and a later drain supersedes an earlier one, so the
+output dir always holds exactly one consistent snapshot. `--follow`
+appends each (minute, digest) row once, when the watermark closes its
+window. Checkpointed, so restarts resume.
 
 Everything here is a THIN argument parser over tested library
 functions — no query logic lives in this module.
@@ -85,7 +87,8 @@ def _build_parser() -> argparse.ArgumentParser:
     st.add_argument("--checkpoint", required=True)
     st.add_argument(
         "--follow", action="store_true",
-        help="keep running (default: availableNow — drain and exit)",
+        help="keep running, appending each window once the watermark "
+        "closes it (default: availableNow — drain and exit)",
     )
 
     dd = sub.add_parser(
@@ -207,64 +210,23 @@ def cmd_digest(args) -> int:
     return 0
 
 
-def _complete_snapshot_writer(classes, out: str, checkpoint: str):
-    """complete mode + full-state overwrite per epoch: a retried
-    micro-batch rewrites the same state, a later drain replaces the
-    earlier one, so readers summing num_queries never double-count
-    (same idempotent shape as stream_slowlog_to_jdbc's JDBC sink).
-    The epoch column records which micro-batch produced the snapshot.
-    Shared by `stream` and the non-follow `tail` drain.
-
-    Guard (r11 advisor find): this writer OVERWRITES ``out``. If
-    ``out`` was previously an append-mode file sink (``tail
-    --follow`` writes there and leaves ``_spark_metadata``), a drain
-    reusing the same --out would DELETE the history the append sink
-    accumulated — append-mode state has already evicted closed
-    windows, so the complete snapshot holds only leftover open
-    windows — and leave a stale _spark_metadata behind. Refuse and
-    demand a distinct --out instead."""
-    import os
-
-    if os.path.isdir(os.path.join(out, "_spark_metadata")):
-        raise SystemExit(
-            f"refusing to drain into {out!r}: it contains _spark_metadata "
-            "from an append-mode (tail --follow) file sink; a complete-mode "
-            "snapshot overwrite would delete the appended window history. "
-            "Pass a distinct --out for the drain."
-        )
-
-    def sink_batch(batch_df, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-            "overwrite"
-        ).parquet(out)
-
-    return (
-        classes.writeStream.outputMode("complete")
-        .foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint)
+def _run_classes_stream(args, events) -> int:
+    from slowlog2clickhouse_spark.streaming.slowlog_stream import (
+        run_classes_stream,
     )
+
+    run_classes_stream(events, args.out, args.checkpoint, args.follow)
+    if not args.follow:
+        print(f"drained -> {args.out}")
+    return 0
 
 
 def cmd_stream(args) -> int:
     from slowlog2clickhouse_spark.streaming.slowlog_stream import (
         read_slowlog_stream,
-        stream_classes,
     )
 
-    spark = _get_spark()
-    events = read_slowlog_stream(spark, args.log_dir)
-    classes = stream_classes(events)
-    writer = _complete_snapshot_writer(classes, args.out, args.checkpoint)
-    if args.follow:
-        q = writer.start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        print(f"drained -> {args.out}")
-    return 0
+    return _run_classes_stream(args, read_slowlog_stream(_get_spark(), args.log_dir))
 
 
 def cmd_tail(args) -> int:
@@ -273,31 +235,8 @@ def cmd_tail(args) -> int:
     glob (per-file byte offsets, exactly-once; the in-flight torn
     record is held back until mysqld writes the next record header;
     rotation detected via the offset's head-hash + inode incarnation
-    stamp).
-    Events carry the parser's exact digest, the same one `ingest`
-    writes, so `ingest` history + `tail --from latest` join cleanly.
-
-    Two modes with DIFFERENT sink semantics, both r11 code-review
-    driven:
-    - drain (default): one bounded availableNow batch of what is
-      complete right now, complete-mode snapshot overwrite, exit.
-      (processAllAvailable would chase an actively-growing file
-      forever — Spark documents it as able to block indefinitely.)
-    - --follow: unbounded run, so complete mode is WRONG (state and
-      per-trigger rewrite grow with uptime, and complete mode ignores
-      the watermark so nothing is ever evicted). Follow mode uses the
-      watermarked APPEND path: each 1-minute (window, digest) row is
-      emitted exactly once when the 5-minute watermark closes it,
-      appended to the parquet sink — bounded state however long the
-      tail runs. Trade: a window's row appears only after the
-      watermark passes; residual still-open windows can be flushed by
-      restarting as a drain with the SAME --checkpoint but a
-      DISTINCT --out (the snapshot holds only the leftover open
-      windows — closed ones were already appended — and the drain
-      guard refuses to overwrite the append sink's history; union
-      the two outputs for the complete picture)."""
+    stamp). Drain and --follow sink semantics: run_classes_stream."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
-    from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes
 
     spark = _get_spark()
     register(spark)
@@ -310,24 +249,7 @@ def cmd_tail(args) -> int:
         .load()
         .drop("source_file", "incarnation")
     )
-    classes = stream_classes(events)
-
-    if args.follow:
-        q = (
-            classes.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .trigger(processingTime="5 seconds")
-            .start()
-        )
-        q.awaitTermination()
-    else:
-        writer = _complete_snapshot_writer(classes, args.out, args.checkpoint)
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        print(f"drained -> {args.out}")
-    return 0
+    return _run_classes_stream(args, events)
 
 
 def _write_counted(df, out: str) -> int:

@@ -15,8 +15,14 @@ oracle agrees bit-for-bit (SURVEY.md §7 G1).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# the one scratch root of ops that materialize files on local disk;
+# scripts/ptest.py points each test shard at its own
+SCRATCH_ROOT = os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")
 
 TABLES = (
     "region",

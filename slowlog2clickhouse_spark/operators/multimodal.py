@@ -32,13 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from slowlog2clickhouse_spark.codecs import PGM_CODEC, decode_pgm, encode_pgm
-from slowlog2clickhouse_spark.io import load_table
+from slowlog2clickhouse_spark.io import SCRATCH_ROOT, load_table
 from slowlog2clickhouse_spark.operators.stitched import ranked_topk
 from slowlog2clickhouse_spark.registry import op
 
 N_FEATURES = 16
 FRAME_BYTES = 256
-_MM_TMP = os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")  # per-shard override: scripts/ptest.py
 
 
 def attach_binary(docs: DataFrame) -> DataFrame:
@@ -717,7 +716,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    out = f"{_MM_TMP}/binary_docs"
+    out = f"{SCRATCH_ROOT}/binary_docs"
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     rows = (
@@ -884,7 +883,7 @@ def write_pgm_corpus(spark: SparkSession, sf_dir: str) -> str:
     binaryFile read + Arrow decode."""
     import shutil
 
-    out = f"{_MM_TMP}/pgm_docs"
+    out = f"{SCRATCH_ROOT}/pgm_docs"
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     rows = (

@@ -8,13 +8,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from slowlog2clickhouse_spark.io import load_table
+from slowlog2clickhouse_spark.io import SCRATCH_ROOT as _TMP, load_table
 from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
 from slowlog2clickhouse_spark.plans.pipeline import ingest_slowlog
 from slowlog2clickhouse_spark.registry import op
 from slowlog2clickhouse_spark.sinks.jdbc import clickhouse_ddl, jdbc_options, write_jdbc
-
-_TMP = os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")  # per-shard override: scripts/ptest.py
 
 
 _SINK_CONTRACT_GOLDEN = os.path.join(

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from slowlog2clickhouse_spark.io import load_table
+from slowlog2clickhouse_spark.io import SCRATCH_ROOT as _TMP, load_table
 from slowlog2clickhouse_spark.plans.pipeline import (
     DEFAULT_STAT_METRICS,
     ingest_slowlog,
@@ -55,8 +55,6 @@ GOLDEN_EVENTS = os.path.join(
 GOLDEN_RECORDS = os.path.join(
     _REPO_ROOT, "tests", "fixtures", "golden", "slowlog_small_records.parquet"
 )
-_TMP = os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")  # per-shard override: scripts/ptest.py
-
 # the golden IR as a DuckDB table expression (absolute path: the driver
 # runs DuckDB wherever it likes; the parquet is committed in-repo)
 _GOLD = f"read_parquet('{GOLDEN_EVENTS}')"
@@ -288,7 +286,7 @@ def scan_text_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ev AS (
       SELECT *, date_trunc('minute', ts) AS period_start
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL),
     ranked AS (
       SELECT *, row_number() OVER (
@@ -306,10 +304,10 @@ def slowlog_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END reference pipeline: parse → fingerprint/digest →
     1-minute class aggregation with full stat battery (cnt/sum/min/
     max/avg/med/p95/p99 + bool sums + worst-execution example). The
-    oracle recomputes the battery over the committed golden IR; the
-    example tiebreak is the content-deterministic one (pipeline.py
-    _battery docstring)."""
-    classes = ingest_slowlog(spark, FIXTURE_LOG, example_tiebreak="query")
+    oracle recomputes the battery over the committed golden IR; a
+    query_time tie for the example goes to the larger query text
+    (pipeline.py _battery docstring)."""
+    classes = ingest_slowlog(spark, FIXTURE_LOG)
     return _driver_battery(classes)
 
 
@@ -318,7 +316,7 @@ def slowlog_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ev AS (
       SELECT *, date_trunc('minute', ts) AS period_start
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL),
     ranked AS (
       SELECT *, row_number() OVER (
@@ -342,7 +340,7 @@ def slowlog_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowlog2clickhouse_spark.plans.pipeline import aggregate_global
 
     events = parse_slowlog(spark, FIXTURE_LOG)
-    return _driver_battery(aggregate_global(events, example_tiebreak="query"))
+    return _driver_battery(aggregate_global(events))
 
 
 @op(
@@ -358,7 +356,7 @@ def slowlog_global(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(query_time) AS qt_min,
            max(query_time) AS qt_max,
            TRUE AS med_ok, TRUE AS p95_ok, TRUE AS p99_ok
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1, 2
     """,
@@ -429,7 +427,7 @@ def slowlog_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS total_queries,
            round(sum(query_time), 6) AS total_query_time,
            max(query_time) AS worst_query_time
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY digest
     ORDER BY sum(query_time) DESC NULLS LAST, digest ASC
@@ -467,7 +465,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(date_trunc('minute', ts) AS DATE) AS period_date,
            CAST(count(DISTINCT (digest, date_trunc('minute', ts))) AS BIGINT)
                AS n_classes
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1
     """,

@@ -64,33 +64,30 @@ def _battery(
     period: str,
     metrics,
     percentiles: str,
-    example_tiebreak: str,
 ) -> DataFrame:
     """The per-class stat battery ([go-mysql] event/metrics.go [R:H])
     as ONE SQL aggregate: per (digest, period) when ``per_class``,
     else per period with digest/fingerprint pinned to ``GLOBAL``.
 
-    ``example_tiebreak``: the worst-execution pick on a query_time tie.
-    ``record_no`` mirrors the reference (last-read wins within a batch);
-    ``query`` is a content-deterministic tiebreak independent of read
-    order/partitioning — the driver-facing ops use it so the class row
-    hashes identically against a SQL oracle on any executor layout.
+    The worst execution (``example``, ``labels``) is the one with the
+    largest query_time, and a tie goes to the larger query text: a
+    pick by content, so the class row does not depend on how Spark
+    packs file splits into partitions.
 
     The text is built from the metric names (backtick-quoted) and from
-    fixed dict lookups of ``period``/``percentiles``/``example_tiebreak``,
-    so no caller text reaches the SQL unquoted. Text, because the
+    fixed dict lookups of ``period``/``percentiles``, so no caller
+    text reaches the SQL unquoted. Text, because the
     whole battery then costs one ``spark.sql`` call, where Column
     objects cost hundreds of py4j round trips before any job starts;
     the call drops its temp view before it returns.
     """
     period_len = _PERIOD_S[period]
     pct = _PERCENTILE_FN[percentiles]
-    tb = {"record_no": "record_no", "query": "query"}[example_tiebreak]
     # example = query text of the worst execution (max query_time,
-    # tiebreak) — event/class.go example logic [R:H]; labels: the
+    # then query) — event/class.go example logic [R:H]; labels: the
     # qan-api2 D5 nested k/v column — the unrecognized `# Key: value`
     # pairs of the class's worst execution ride along to the sink
-    worst = f"struct(query_time, {tb})"
+    worst = "struct(query_time, query)"
     # `outer` lists the output columns in order over `inner`, the
     # aggregate; the global row pins the per-class dims digest and
     # fingerprint (its unused min(fingerprint) is pruned)
@@ -156,10 +153,9 @@ def aggregate_classes(
     period: str = "minute",
     metrics=DEFAULT_STAT_METRICS,
     percentiles: str = "exact",
-    example_tiebreak: str = "record_no",
 ) -> DataFrame:
     """events (+fingerprint/digest) → one row per (digest, period)."""
-    return _battery(events, True, period, metrics, percentiles, example_tiebreak)
+    return _battery(events, True, period, metrics, percentiles)
 
 
 def aggregate_global(
@@ -167,14 +163,13 @@ def aggregate_global(
     period: str = "minute",
     metrics=DEFAULT_STAT_METRICS,
     percentiles: str = "exact",
-    example_tiebreak: str = "record_no",
 ) -> DataFrame:
     """Whole-period rollup beside the per-class rows — the reference's
     ``Result.Global`` ([go-mysql] event/global.go [R:H]): same stat
     battery, grouped by period only, digest/fingerprint pinned to the
     GLOBAL sentinel. Partial aggregation makes this a second cheap pass
     over the same shuffle keyspace (|periods| rows out)."""
-    return _battery(events, False, period, metrics, percentiles, example_tiebreak)
+    return _battery(events, False, period, metrics, percentiles)
 
 
 def ingest_slowlog(
@@ -183,7 +178,6 @@ def ingest_slowlog(
     period: str = "minute",
     metrics=DEFAULT_STAT_METRICS,
     percentiles: str = "exact",
-    example_tiebreak: str = "record_no",
 ) -> DataFrame:
     """Full batch pipeline: log file(s) → query-class rows, keyed by
     the exact digest the parser attached to each event."""
@@ -192,7 +186,6 @@ def ingest_slowlog(
         period=period,
         metrics=metrics,
         percentiles=percentiles,
-        example_tiebreak=example_tiebreak,
     )
 
 

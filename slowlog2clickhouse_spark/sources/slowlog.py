@@ -345,11 +345,9 @@ def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
     map_in_pandas_chunker). Arrow-batched; no driver involvement.
 
     ``record_no`` is ``monotonically_increasing_id()`` stamped on the
-    record DataFrame BEFORE the parse stage: globally unique and stable
-    for a given file layout (partition_id << 33 | offset), so
-    ``max_by(..., struct(query_time, record_no))`` tiebreaks are
-    deterministic — a per-batch ``enumerate`` restarts at 0 in every
-    Arrow batch and is neither.
+    record DataFrame BEFORE the parse stage: unique within one read,
+    but renumbered when Spark packs the file splits differently, so
+    nothing keys on it or breaks a tie with it.
     """
     return _parse_stage(
         read_slowlog_records(spark, path), "monotonically_increasing_id()"

@@ -36,13 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from slowlog2clickhouse_spark.io import SCRATCH_ROOT
 from slowlog2clickhouse_spark.registry import op
 
 _counter = itertools.count()
-_TMP = (
-    os.environ.get("SPARK_GRAFT_TMP", "/tmp/slowlog2clickhouse_spark")
-    + "/streaming"
-)  # per-shard override: scripts/ptest.py
+_TMP = SCRATCH_ROOT + "/streaming"
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(

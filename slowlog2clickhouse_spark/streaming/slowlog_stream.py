@@ -9,6 +9,10 @@ definition, batch and streaming execution.
 Scale: each new log file becomes input splits at record boundaries;
 watermark bounds the per-(digest, minute) state; the production sink
 is foreachBatch → partitioned parquet / ClickHouse JDBC.
+
+``run_classes_stream`` is the one runner of the `stream` and `tail`
+commands: a drain writes a complete-mode snapshot, a follow run
+appends each window once the watermark closes it.
 """
 
 from __future__ import annotations
@@ -59,12 +63,17 @@ def _fixture_cuts(txt: str, n: int) -> list:
     return [0] + cuts + [len(txt)]
 
 
-# golden IR path recomputed here (importing operators.slowlog_ops at
-# module scope would re-enter the operators package mid-registration)
-_GOLD = "read_parquet('{}')".format(
-    _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-        "tests", "fixtures", "golden", "slowlog_small_events.parquet",
+# the golden IR with the parser's class columns under the names the
+# parser writes (slowlog_ops._GOLD_PY, recomputed here: importing
+# operators.slowlog_ops at module scope would load the whole operators
+# package on the CLI's stream path)
+_GOLD_PY = (
+    "(SELECT * REPLACE (fingerprint_py AS fingerprint, digest_py AS digest)"
+    " FROM read_parquet('{}'))".format(
+        _os.path.join(
+            _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
+            "tests", "fixtures", "golden", "slowlog_small_events.parquet",
+        )
     )
 )
 
@@ -76,7 +85,7 @@ _STREAM_CLASSES_SQL = f"""
            round(sum(query_time), 6) AS m_query_time_sum,
            max(query_time) AS m_query_time_max,
            min(fingerprint) AS fingerprint
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1, 2
 """
@@ -86,7 +95,7 @@ _STREAM_CLASSES_SQL = f"""
 _TAIL_CLASSES_SQL = f"""
     SELECT digest, count(*) AS num_queries,
            round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
+    FROM {_GOLD_PY}
     WHERE NOT admin AND query IS NOT NULL
     GROUP BY 1
 """
@@ -156,6 +165,76 @@ def stream_classes(events: DataFrame) -> DataFrame:
             "fingerprint",
         )
     )
+
+
+# Trigger cadence of a follow-mode run: a live log grows at human
+# cadence, and each trigger costs one planning round and one commit
+FOLLOW_TRIGGER = "5 seconds"
+
+
+def _complete_snapshot_writer(classes: DataFrame, out: str, checkpoint: str):
+    """complete mode + full-state overwrite per epoch: a retried
+    micro-batch rewrites the same state, a later drain replaces the
+    earlier one, so readers summing num_queries never double-count
+    (same idempotent shape as stream_slowlog_to_jdbc's JDBC sink).
+    The epoch column records which micro-batch produced the snapshot.
+
+    Guard: this writer OVERWRITES ``out``. If ``out`` was previously an
+    append-mode file sink (a follow run writes there and leaves
+    ``_spark_metadata``), a drain reusing the same --out would DELETE
+    the history the append sink accumulated — append-mode state has
+    already evicted closed windows, so the complete snapshot holds only
+    leftover open windows — and leave a stale _spark_metadata behind.
+    Refuse and demand a distinct --out instead."""
+    if _os.path.isdir(_os.path.join(out, "_spark_metadata")):
+        raise SystemExit(
+            f"refusing to drain into {out!r}: it contains _spark_metadata "
+            "from an append-mode (--follow) file sink; a complete-mode "
+            "snapshot overwrite would delete the appended window history. "
+            "Pass a distinct --out for the drain."
+        )
+
+    def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
+            "overwrite"
+        ).parquet(out)
+
+    return (
+        classes.writeStream.outputMode("complete")
+        .foreachBatch(sink_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+
+
+def run_classes_stream(
+    events: DataFrame, out: str, checkpoint: str, follow: bool
+) -> None:
+    """The one stream runner of the `stream` and `tail` commands:
+    ``stream_classes`` over ``events`` into the parquet directory
+    ``out``. Blocks until the query ends.
+
+    A drain (``follow=False``) is one bounded availableNow run written
+    as a complete-mode snapshot (processAllAvailable could chase a
+    growing file forever). A follow run is unbounded, so complete mode
+    would keep and rewrite every window forever (it ignores the
+    watermark); it appends each (window, digest) row once, when the
+    5-minute watermark closes it. Still-open windows can be flushed by
+    a drain with the SAME checkpoint and a DISTINCT out (the drain
+    guard refuses the append sink's directory); union the two."""
+    classes = stream_classes(events)
+    if follow:
+        writer = (
+            classes.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime=FOLLOW_TRIGGER)
+        )
+    else:
+        writer = _complete_snapshot_writer(classes, out, checkpoint).trigger(
+            availableNow=True
+        )
+    writer.start().awaitTermination()
 
 
 @op("stream_slowlog_classes", oracle=_STREAM_CLASSES_SQL)
@@ -283,7 +362,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT digest,
              length(bin(greatest(
                CAST(floor(query_time * 1000000) AS BIGINT), 0))) AS bucket
-      FROM {_GOLD}
+      FROM {_GOLD_PY}
       WHERE NOT admin AND query IS NOT NULL AND query_time IS NOT NULL),
     h AS (SELECT digest, bucket, count(*) AS n FROM e GROUP BY 1, 2),
     c AS (SELECT digest, bucket, n,

@@ -241,8 +241,7 @@ def test_cli_tail_drains_live_file_to_batch_equivalent(spark, tmp_path):
 
     from slowlog2clickhouse_spark.__main__ import main
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
-    from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes  # noqa: F401
-    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog, with_fingerprint
+    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "slow.log")
@@ -268,7 +267,7 @@ def test_cli_tail_drains_live_file_to_batch_equivalent(spark, tmp_path):
         (r["period_start"], r["digest"]): (r["num_queries"], r["m_query_time_sum"])
         for r in spark.read.parquet(out).collect()
     }
-    ev = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    ev = parse_slowlog(spark, FIXTURE_LOG).where(
         ~F.col("admin") & F.col("query").isNotNull()
     )
     want = {
@@ -283,23 +282,6 @@ def test_cli_tail_drains_live_file_to_batch_equivalent(spark, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_cli_drain_refuses_append_sink_dir(tmp_path):
-    """r11 advisor find: a drain (complete-mode snapshot OVERWRITE)
-    into a dir that an append-mode file sink (tail --follow) wrote
-    would delete the appended window history and leave a stale
-    _spark_metadata behind. The snapshot writer must refuse."""
-    import os
-
-    import pytest
-
-    from slowlog2clickhouse_spark.__main__ import _complete_snapshot_writer
-
-    out = str(tmp_path / "out")
-    os.makedirs(os.path.join(out, "_spark_metadata"))
-    with pytest.raises(SystemExit, match="_spark_metadata"):
-        _complete_snapshot_writer(None, out, str(tmp_path / "ckpt"))
 
 
 @pytest.mark.slow  # r17 driver-budget deselection (VERDICT r16 #6); in the full suite via scripts/ptest.py

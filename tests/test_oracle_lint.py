@@ -36,3 +36,29 @@ def test_recursive_ctes_materialize_their_candidate_input():
             if "cand AS MATERIALIZED" not in sql:
                 bad.append(name)
     assert not bad, f"recursive oracles with unmaterialized cand: {bad}"
+
+
+_EVENTS_GOLDEN = re.compile(r"read_parquet\('[^']*slowlog_\w+_events\.parquet'\)")
+_CLASS_COLUMN = re.compile(r"\b(digest|fingerprint)\b(?!_py)")
+
+
+def test_event_golden_oracles_class_by_the_parsers_digest():
+    """The parser attaches the state machine's fingerprint/digest to
+    every event; the events goldens hold the SQL chain's values under
+    those names and the parser's under ``*_py``. An oracle that reads
+    such a golden and names digest or fingerprint must read the
+    ``*_py`` columns (directly, or through slowlog_ops._parser_classed),
+    or a statement where the two fingerprints diverge fails it on
+    correct code."""
+    from slowlog2clickhouse_spark.operators.slowlog_ops import _parser_classed
+
+    bad = []
+    for name, o in all_ops().items():
+        sql = o.oracle or ""
+        for gold in set(_EVENTS_GOLDEN.findall(sql)):
+            sql = sql.replace(_parser_classed(gold), "(parser-classed golden)")
+        # an output alias names no input column
+        sql = re.sub(r'\bAS\s+"?(digest|fingerprint)\b"?', "AS _", sql)
+        if _EVENTS_GOLDEN.search(sql) and _CLASS_COLUMN.search(sql):
+            bad.append(name)
+    assert not bad, f"oracles classing the golden by the chain's digest: {sorted(bad)}"

@@ -537,3 +537,26 @@ def test_lint_allowlists_reference_live_ops():
     ):
         stale = s - live
         assert not stale, f"{name} grants for unknown ops: {sorted(stale)}"
+
+
+def _package_sources() -> dict:
+    import pathlib
+
+    import slowlog2clickhouse_spark
+
+    root = pathlib.Path(slowlog2clickhouse_spark.__file__).parent
+    return {str(p.relative_to(root)): p.read_text() for p in root.rglob("*.py")}
+
+
+def test_cli_starts_no_stream_query():
+    """The CLI only parses arguments: `stream` and `tail` start their
+    queries through streaming/slowlog_stream.run_classes_stream."""
+    assert "writeStream" not in _package_sources()["__main__.py"]
+
+
+def test_class_battery_has_no_tiebreak_knob():
+    """A query_time tie for a class's example is broken by content
+    (struct(query_time, query)) on every path: no knob selects a
+    read-order tie-break anywhere in the package."""
+    hits = [p for p, text in _package_sources().items() if "example_tiebreak" in text]
+    assert not hits, hits

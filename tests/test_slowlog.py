@@ -423,9 +423,7 @@ class TestClassAggregation:
 
     def test_example_is_worst_execution(self, classes, spark):
         """example column holds a query whose time == m_query_time_max."""
-        events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-            ~F.col("admin")
-        )
+        events = parse_slowlog(spark, FIXTURE_LOG).where(~F.col("admin"))
         joined = classes.alias("c").join(
             events.alias("e"),
             (F.col("c.digest") == F.col("e.digest"))
@@ -552,6 +550,45 @@ class TestClassAggregation:
             .collect()
         }
         assert gmax == cmax
+
+
+
+def test_example_tie_does_not_follow_split_packing(spark, tmp_path):
+    """Two files each hold one execution of the same class with the same
+    Query_time. Spark packs file splits by size, so growing one file
+    with unrelated records reorders the read (and renumbers record_no);
+    the class's example and labels must not move with it: a query_time
+    tie goes to the larger query text."""
+
+    def rec(sec: int, qt: str, tag: str, query: str) -> str:
+        return (
+            f"# Time: 2024-01-01T00:00:{sec:02d}.000000Z\n"
+            "# User@Host: u[u] @ h []  Id: 1\n"
+            f"# Query_time: {qt}  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
+            f"# Trace_tag: {tag}\n{query};\n"
+        )
+
+    tie_a = rec(5, "1.5", "a", "SELECT * FROM t WHERE id = 111")
+    tie_b = rec(6, "1.5", "b", "SELECT * FROM t WHERE id = 222")
+    filler = "".join(
+        rec(10 + i % 40, "0.1", "f", f"SELECT c{i % 5} FROM other") for i in range(200)
+    )
+    digest = parse_record(tie_a)["digest"]
+    picks = []
+    for big in ("a", "b"):
+        d = tmp_path / f"{big}_is_larger"
+        os.makedirs(d)
+        (d / "a.log").write_text(tie_a + (filler if big == "a" else ""))
+        (d / "b.log").write_text(tie_b + (filler if big == "b" else ""))
+        (row,) = (
+            ingest_slowlog(spark, str(d))
+            .where(F.col("digest") == digest)
+            .select("num_queries", "example", "labels")
+            .collect()
+        )
+        picks.append(tuple(row))
+    want = (2, "SELECT * FROM t WHERE id = 222", {"Trace_tag": "b"})
+    assert picks == [want, want]
 
 
 class TestPythonDataSource:

@@ -89,9 +89,7 @@ def test_stream_ingest_gzipped_rotation_set(spark):
     got = run_to_memory(
         stream_classes(read_slowlog_stream(spark, FIXTURE_GZ_DIR)), "update"
     )
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_GZ_DIR)).where(
+    events = parse_slowlog(spark, FIXTURE_GZ_DIR).where(
         ~F.col("admin") & F.col("query").isNotNull()
     )
     batch = (
@@ -141,3 +139,111 @@ def test_stream_pctl_merge_runs_multiple_batches_and_equals_batch_op(
         .collect()
     }
     assert got == batch
+
+
+def test_drain_refuses_append_sink_dir(tmp_path):
+    """A drain (complete-mode snapshot OVERWRITE) into a dir that an
+    append-mode file sink (a --follow run) wrote would delete the
+    appended window history and leave a stale _spark_metadata behind.
+    The snapshot writer must refuse."""
+    import os
+
+    from slowlog2clickhouse_spark.streaming.slowlog_stream import (
+        _complete_snapshot_writer,
+    )
+
+    out = str(tmp_path / "out")
+    os.makedirs(os.path.join(out, "_spark_metadata"))
+    with pytest.raises(SystemExit, match="_spark_metadata"):
+        _complete_snapshot_writer(None, out, str(tmp_path / "ckpt"))
+
+
+def _rec(hour: int, minute: int, table: str, qt: float) -> str:
+    return (
+        f"# Time: 2024-01-01T{hour:02d}:{minute:02d}:30.000000Z\n"
+        "# User@Host: u[u] @ h []  Id: 1\n"
+        f"# Query_time: {qt}  Lock_time: 0.0 Rows_sent: 1  Rows_examined: 1\n"
+        f"SELECT * FROM {table} WHERE id = {minute};\n"
+    )
+
+
+def test_stream_follow_appends_each_closed_window_once(spark, tmp_path, monkeypatch):
+    """`stream --follow` runs the watermarked APPEND sink: a window's
+    row is appended once the 5-minute watermark passes its end, never
+    again, and equals the batch class row; a window the watermark has
+    not closed is not written. (A complete-mode snapshot would rewrite
+    every window, the open ones too, on every trigger.)"""
+    import os
+    import threading
+    import time
+
+    from slowlog2clickhouse_spark.__main__ import main
+    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog
+    from slowlog2clickhouse_spark.streaming import slowlog_stream
+
+    monkeypatch.setattr(slowlog_stream, "FOLLOW_TRIGGER", "100 milliseconds")
+    logs, staging = tmp_path / "logs", tmp_path / "staging"
+    os.makedirs(logs)
+    os.makedirs(staging)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def land(name: str, text: str) -> None:
+        # a file source must see a file whole: write aside, then rename
+        (staging / name).write_text(text)
+        os.rename(staging / name, logs / name)
+
+    def emitted():
+        if not os.path.isdir(out):
+            return []
+        return [
+            (r["period_start"], r["digest"], r["num_queries"], r["m_query_time_sum"])
+            for r in spark.read.parquet(out).collect()
+        ]
+
+    # minutes 0..9, two classes per minute; then one record at 01:00
+    first = "".join(
+        _rec(0, m, t, 0.25 * (m + 1)) for m in range(10) for t in ("a", "b")
+    )
+    land("seg0.log", first)
+    before = {q.id for q in spark.streams.active}
+    runner = threading.Thread(
+        target=main,
+        args=(["stream", "--log-dir", str(logs), "--out", out,
+               "--checkpoint", ckpt, "--follow"],),
+        daemon=True,
+    )
+    runner.start()
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        started = [q for q in spark.streams.active if q.id not in before]
+        if started:
+            break
+        time.sleep(0.2)
+    (q,) = started
+    try:
+        q.processAllAvailable()
+        # watermark = 00:09:30 - 5 min: minutes 0..3 are closed
+        early = emitted()
+        land("seg1.log", _rec(1, 0, "a", 1.0))
+        q.processAllAvailable()
+        # watermark = 01:00:30 - 5 min: every first-segment window closed
+        late = emitted()
+    finally:
+        q.stop()
+        runner.join(60)
+    assert not runner.is_alive()
+    assert os.path.isdir(os.path.join(out, "_spark_metadata"))
+
+    batch = parse_slowlog(spark, str(logs)).where(~F.col("admin"))
+    want = {
+        (r["p"], r["digest"]): (r["n"], r["qt"])
+        for r in batch.groupBy(F.date_trunc("minute", "ts").alias("p"), "digest")
+        .agg(F.count("*").alias("n"), F.round(F.sum("query_time"), 6).alias("qt"))
+        .collect()
+    }
+    assert {p.minute for p, *_ in early} == {0, 1, 2, 3}
+    assert len(late) == len({(p, d) for p, d, *_ in late}), "a window appended twice"
+    assert {(p, d): (n, qt) for p, d, n, qt in late} == {
+        k: v for k, v in want.items() if k[0].hour == 0
+    }
+    assert set(early) <= set(late)

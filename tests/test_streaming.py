@@ -890,10 +890,7 @@ def test_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
     are appended exactly once and match the batch aggregation for the
     same windows."""
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
-    from slowlog2clickhouse_spark.sources.slowlog import (
-        parse_slowlog,
-        with_fingerprint,
-    )
+    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
     from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes
 
@@ -931,7 +928,7 @@ def test_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert got, "watermark never closed any window"
-    ev = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    ev = parse_slowlog(spark, FIXTURE_LOG).where(
         ~F.col("admin") & F.col("query").isNotNull()
     )
     want_all = {
@@ -1574,10 +1571,7 @@ def test_multi_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
     import re
 
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
-    from slowlog2clickhouse_spark.sources.slowlog import (
-        parse_slowlog,
-        with_fingerprint,
-    )
+    from slowlog2clickhouse_spark.sources.slowlog import parse_slowlog
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
     from slowlog2clickhouse_spark.streaming.slowlog_stream import stream_classes
 
@@ -1622,7 +1616,7 @@ def test_multi_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert got, "watermark never closed any window"
-    ev = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
+    ev = parse_slowlog(spark, FIXTURE_LOG).where(
         ~F.col("admin") & F.col("query").isNotNull()
     )
     want_all = {
