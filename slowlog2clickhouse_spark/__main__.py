@@ -77,9 +77,6 @@ def _build_parser() -> argparse.ArgumentParser:
     dig = sub.add_parser("digest", help="pt-query-digest-style stdout report")
     dig.add_argument("--log", required=True)
     dig.add_argument("--top", type=int, default=10)
-    dig.add_argument(
-        "--period", default="minute", choices=("minute", "hour", "day")
-    )
 
     st = sub.add_parser("stream", help="streaming ingest of a growing log dir")
     st.add_argument("--log-dir", required=True)
@@ -187,7 +184,7 @@ def cmd_digest(args) -> int:
     # the totals are sums over the class rows, observed in the same job
     # that ranks them: the log is parsed once
     totals = Observation("totals")
-    classes = ingest_slowlog(_get_spark(), args.log, period=args.period).observe(
+    classes = ingest_slowlog(_get_spark(), args.log).observe(
         totals,
         F.sum("num_queries").alias("n"),
         F.sum("m_query_time_sum").alias("qt"),

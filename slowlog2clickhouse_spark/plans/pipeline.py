@@ -86,8 +86,8 @@ def _battery(
     # example = query text of the worst execution (max query_time,
     # then query) — event/class.go example logic [R:H]; labels: the
     # qan-api2 D5 nested k/v column — the unrecognized `# Key: value`
-    # pairs of the class's worst execution ride along to the sink
-    worst = "struct(query_time, query)"
+    # pairs of the class's worst execution ride along to the sink. One
+    # max_by picks both, so they come from the same row by construction
     # `outer` lists the output columns in order over `inner`, the
     # aggregate; the global row pins the per-class dims digest and
     # fingerprint (its unused min(fingerprint) is pruned)
@@ -100,8 +100,7 @@ def _battery(
         "min(db) AS db",
         "min(`user`) AS `user`",
         "min(host) AS host",
-        f"max_by(query, {worst}) AS example",
-        f"max_by(extra_metrics, {worst}) AS labels",
+        "max_by(struct(query, extra_metrics), struct(query_time, query)) AS worst",
         # Percona Log_slow_rate_limit upscaling: with rate_type='query'
         # only 1/N sessions are logged, so each logged event stands for
         # rate_limit executions ([go-mysql] log/log.go RateType/RateLimit)
@@ -112,7 +111,9 @@ def _battery(
         "period_start",
         "num_queries",
         "fingerprint" if per_class else "'GLOBAL' AS fingerprint",
-        "db", "`user`", "host", "example", "labels", "num_queries_scaled",
+        "db", "`user`", "host",
+        "worst.query AS example", "worst.extra_metrics AS labels",
+        "num_queries_scaled",
     ]
     for m in metrics:
         c, name = _q(m), f"m_{m}_"

@@ -29,6 +29,17 @@ def local_cpus() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+# runtime-settable confs the engine relies on: get_session sets them on
+# the sessions it builds, ensure_compat on a session it did not build
+_RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
 def get_session(
     app_name: str = "slowlog2clickhouse_spark",
     master: str | None = None,
@@ -41,12 +52,8 @@ def get_session(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=_RUNTIME_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # embedded Derby (JDBC tests) writes derby.log into user.dir by
@@ -82,16 +89,13 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
     on an existing session is sufficient as long as it happens before
     the first read of ``events.parquet``.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # performance (all runtime-mutable): a foreign session arrives with
-    # the 200-partition default — at our test SFs that is 200 near-empty
-    # tasks (and 200 Python workers for every applyInPandas); size to
-    # local cores and let AQE coalesce upward jobs re-split
+    for k, v in _RUNTIME_CONF.items():
+        spark.conf.set(k, v)
+    # a foreign session arrives with the 200-partition default — at our
+    # test SFs that is 200 near-empty tasks (and 200 Python workers for
+    # every applyInPandas); size to local cores and let AQE coalesce
+    # upward jobs re-split
     spark.conf.set("spark.sql.shuffle.partitions", str(local_cpus()))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark
 
 

@@ -132,6 +132,17 @@ def _yes_no(val: str) -> bool:
     raise ValueError(val)
 
 
+def _int64(val: str) -> int:
+    """``int`` for a LongType column: a value outside int64 (which
+    Arrow cannot carry) raises ValueError, so the caller keeps it raw
+    in extra_metrics. Only a digit string longer than 18 characters
+    can be out of range, so a common value skips the range check."""
+    n = int(val)
+    if len(val) > 18 and not -(1 << 63) <= n < (1 << 63):
+        raise ValueError(val)
+    return n
+
+
 # hot-path dispatch: key spelling -> (converter, column). Percona and
 # MySQL capitalize the first word only ('Query_time', 'Rows_examined',
 # 'Tmp_table_on_disk') and spell the InnoDB/QC prefixes
@@ -139,7 +150,7 @@ def _yes_no(val: str) -> bool:
 # lower-case names; other casings fall back to .lower(). A converter
 # that raises ValueError sends the raw value to extra_metrics.
 _KNOWN_EXACT: dict[str, tuple] = {}
-for _conv, _cols in ((float, TIME_METRICS), (int, NUMBER_METRICS), (_yes_no, BOOL_METRICS)):
+for _conv, _cols in ((float, TIME_METRICS), (_int64, NUMBER_METRICS), (_yes_no, BOOL_METRICS)):
     for _col in _cols:
         _KNOWN_EXACT[_col] = _KNOWN_EXACT[_col.capitalize()] = (_conv, _col)
 # dimension keys: Schema sets db (and alone does not make a record),
@@ -149,7 +160,7 @@ for _key, _hit in {
     "schema": (str, "db"),
     "id": (None, "id"),
     "log_slow_rate_type": (str, "rate_type"),
-    "log_slow_rate_limit": (int, "rate_limit"),
+    "log_slow_rate_limit": (_int64, "rate_limit"),
 }.items():
     _KNOWN_EXACT[_key] = _KNOWN_EXACT[_key.capitalize()] = _hit
 # MySQL 8.0 log_slow_extra spellings ([go-mysql] log/slow/parser.go
@@ -158,16 +169,16 @@ for _key, _hit in {
 # and 8.0 logs aggregate together; the genuinely new 8.0 counters
 # (Bytes_received, Read_*, Sort_*_count, Start/End) flow into
 # extra_metrics, the same dynamic escape hatch the reference uses)
-_KNOWN_EXACT["Errno"] = (int, "last_errno")
-_KNOWN_EXACT["Created_tmp_tables"] = (int, "tmp_tables")
-_KNOWN_EXACT["Created_tmp_disk_tables"] = (int, "tmp_disk_tables")
-_KNOWN_EXACT["Sort_merge_passes"] = (int, "merge_passes")
-_KNOWN_EXACT["InnoDB_IO_r_ops"] = (int, "innodb_io_r_ops")
-_KNOWN_EXACT["InnoDB_IO_r_bytes"] = (int, "innodb_io_r_bytes")
+_KNOWN_EXACT["Errno"] = (_int64, "last_errno")
+_KNOWN_EXACT["Created_tmp_tables"] = (_int64, "tmp_tables")
+_KNOWN_EXACT["Created_tmp_disk_tables"] = (_int64, "tmp_disk_tables")
+_KNOWN_EXACT["Sort_merge_passes"] = (_int64, "merge_passes")
+_KNOWN_EXACT["InnoDB_IO_r_ops"] = (_int64, "innodb_io_r_ops")
+_KNOWN_EXACT["InnoDB_IO_r_bytes"] = (_int64, "innodb_io_r_bytes")
 _KNOWN_EXACT["InnoDB_IO_r_wait"] = (float, "innodb_io_r_wait")
 _KNOWN_EXACT["InnoDB_rec_lock_wait"] = (float, "innodb_rec_lock_wait")
 _KNOWN_EXACT["InnoDB_queue_wait"] = (float, "innodb_queue_wait")
-_KNOWN_EXACT["InnoDB_pages_distinct"] = (int, "innodb_pages_distinct")
+_KNOWN_EXACT["InnoDB_pages_distinct"] = (_int64, "innodb_pages_distinct")
 _KNOWN_EXACT["QC_Hit"] = (_yes_no, "qc_hit")
 
 _TEMPLATE = {f.name: None for f in EVENT_SCHEMA.fields}
@@ -187,15 +198,20 @@ _PREAMBLE_RE = re.compile(
 
 
 def _parse_time_header(s: str) -> datetime | None:
-    m = _ISO_TIME.match(s)
-    if m:
-        y, mo, d, h, mi, sec, frac = m.groups()
-        us = int((frac or "0").ljust(6, "0")[:6])
-        return datetime(int(y), int(mo), int(d), int(h), int(mi), int(sec), us)
-    m = _COMPACT_TIME.match(s)
-    if m:
-        yy, mo, d, h, mi, sec = m.groups()
-        return datetime(2000 + int(yy), int(mo), int(d), int(h), int(mi), int(sec))
+    """The `# Time:` value as a datetime; None when it is not a time
+    or names no real instant (minute 60, month 13, Feb 30)."""
+    try:
+        m = _ISO_TIME.match(s)
+        if m:
+            y, mo, d, h, mi, sec, frac = m.groups()
+            us = int((frac or "0").ljust(6, "0")[:6])
+            return datetime(int(y), int(mo), int(d), int(h), int(mi), int(sec), us)
+        m = _COMPACT_TIME.match(s)
+        if m:
+            yy, mo, d, h, mi, sec = m.groups()
+            return datetime(2000 + int(yy), int(mo), int(d), int(h), int(mi), int(sec))
+    except ValueError:
+        pass
     return None
 
 
@@ -271,9 +287,13 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
         if c0 in "Ss" and line[:3].lower() == "set":
             m = _SET_TS_RE.match(line)
             if m:
-                ev["ts"] = datetime.fromtimestamp(
-                    int(m.group(1)), tz=timezone.utc
-                ).replace(tzinfo=None)
+                # an epoch past year 9999 keeps the header's ts
+                try:
+                    ev["ts"] = datetime.fromtimestamp(
+                        int(m.group(1)), tz=timezone.utc
+                    ).replace(tzinfo=None)
+                except (ValueError, OverflowError, OSError):
+                    pass
                 saw_header = True
                 continue
         elif c0 in "Uu" and line[:3].lower() == "use":

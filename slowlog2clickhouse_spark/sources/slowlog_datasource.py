@@ -24,7 +24,7 @@ file) is the better tool — documented trade, same output schema.
 Tail reader (streaming): ``slowlog_tail_multi``
 (SlowlogMultiTailStreamReader) follows one growing file, a directory
 or a glob; a plain file path globs to itself. It plans and reads
-through three module-level primitives:
+through module-level primitives:
 
   * ``_stamp_file``       — a file's offset entry {pos, head, head_n,
                             ino}: last complete-record boundary + the
@@ -34,13 +34,16 @@ through three module-level primitives:
                             (reset) and produce the planned byte range
                             (+ salvage leg) — the ONLY place rotation
                             is detected;
-  * ``_read_planned_range`` — execute a planned range: locate the end
+  * ``_read_planned_range`` — the read side: locate the end
                             incarnation (live path, then the
-                            once-rotated ``<path>.1``), verify it on
-                            the opened handle, enforce the exact
-                            planned length, apply the same-incarnation
-                            guard, then best-effort salvage of the
-                            start incarnation's unread tail.
+                            once-rotated ``<path>.1``), then
+                            best-effort salvage of the start
+                            incarnation's unread tail — every read
+                            through ONE ``_verified_range``, which
+                            verifies the stamp on the opened handle,
+                            enforces the exact planned length, applies
+                            the same-incarnation guard and re-checks
+                            the stamp after the read.
 """
 
 from __future__ import annotations
@@ -95,18 +98,22 @@ def _file_ino(path: str) -> int:
         return 0
 
 
-def _read_verified_tail(
+def _verified_range(
     path: str,
     head: str,
     head_n: int,
     pos: int,
+    stop: int | None,
     ino: int = 0,
-) -> bytes:
-    """Read ``path[pos:]`` iff the file's identity matches the recorded
-    incarnation stamp — the salvage primitive for FINAL files (a
-    rotated sibling never grows, so a short read is the file's true
-    end, not a torn range; planned live ranges go through
-    :func:`_verified_range`, which enforces the exact planned length).
+    sib_head: str = "",
+    sib_head_n: int = 0,
+    sib_pos: int = 0,
+) -> tuple[bytes, int, bool, bool]:
+    """Read ``[pos, stop-1)`` of ONE candidate file iff it verifies as
+    the incarnation the stamp (head/head_n, ino) names — the one
+    open-verify-read primitive of the tail reader. ``stop=None`` reads
+    to EOF: the salvage read of a rotated sibling, which never grows,
+    so a short read there is the file's true end, not a torn range.
     Identity holds when either leg matches:
 
     * md5 of the first ``head_n`` bytes equals ``head`` (the rotated
@@ -121,59 +128,8 @@ def _read_verified_tail(
     incarnation (r12 second-review find) — live-path callers pass
     ino=0 and rely on the head hash alone.
 
-    Both stats come from ``os.fstat`` on the OPENED handle, not the
-    path — a path-level stat-then-open would let a rotation between
-    the two calls authenticate one file and read another (TOCTOU) —
-    and the identity prefix is re-read AFTER the body read (r14 third
-    review, same closure as :func:`_verified_range`): an in-place
-    rewrite of the sibling's inode between the head hash and the body
-    read (``cp new old.1`` over an existing .1 — logrotate
-    copytruncate with rotate=1 produces exactly this) would otherwise
-    hand back new-incarnation bytes under the old stamp. The residual
-    is a replacement byte-identical over the first ``head_n`` bytes,
-    or an ino-only authentication of a stampless (head_n=0) entry —
-    both pre-existing blind spots of the stamp itself.
-
-    Returns b"" when the file is missing, unreadable, or fails both
-    identity legs."""
-    try:
-        with open(path, "rb") as fh:
-            st = os.fstat(fh.fileno())
-            prefix = fh.read(min(head_n, st.st_size)) if head_n else b""
-            ok = bool(ino) and st.st_ino == ino
-            if not ok and head_n and head:
-                ok = (
-                    len(prefix) >= head_n
-                    and hashlib.md5(prefix).hexdigest() == head
-                )
-            if not ok:
-                return b""
-            fh.seek(pos)
-            buf = fh.read()
-            if prefix:
-                fh.seek(0)
-                if fh.read(len(prefix)) != prefix:
-                    return b""
-            return buf
-    except OSError:
-        return b""
-
-
-def _verified_range(
-    path: str,
-    head: str,
-    head_n: int,
-    pos: int,
-    stop: int,
-    ino: int = 0,
-    sib_head: str = "",
-    sib_head_n: int = 0,
-    sib_pos: int = 0,
-) -> tuple[bytes, int, bool, bool]:
-    """Read the planned live range ``[base, stop-1)`` of ONE candidate
-    file iff it verifies as the END incarnation — the planned-range
-    counterpart of :func:`_read_verified_tail`, with two extra
-    guarantees (r12 ADVICE):
+    A planned range (``stop`` given) carries two more guarantees
+    (r12 ADVICE):
 
     * **exact length** — the read must return every planned byte; a
       short read (the file shrank under the plan with an identical
@@ -191,23 +147,30 @@ def _verified_range(
       — see :func:`_read_planned_range` for why the live path must
       never take this lift.
 
-    All verification happens on the one opened handle (no TOCTOU),
-    and the incarnation stamp is verified AGAIN after the body read
-    (r13 ADVICE #2): a same-inode copytruncate that regrows past the
-    planned stop between the head hash and the body read is caught by
-    the post-read prefix comparison, so a full-length read of
-    replaced content can never be returned as ok — the only remaining
-    blind spot is a replacement byte-identical over the verified
-    prefix, which no head-stamp scheme can distinguish.
+    Both stats come from ``os.fstat`` on the OPENED handle, not the
+    path — a path-level stat-then-open would let a rotation between
+    the two calls authenticate one file and read another (TOCTOU) —
+    and the identity prefix is re-read AFTER the body read (r13
+    ADVICE #2, r14 third review): a same-inode copytruncate that
+    regrows past the planned stop, or an in-place rewrite of a
+    sibling's inode (``cp new old.1`` over an existing .1 — logrotate
+    copytruncate with rotate=1 produces exactly this), between the
+    head hash and the body read would otherwise hand back
+    new-incarnation bytes under the old stamp. The residual is a
+    replacement byte-identical over the verified prefix, or an
+    ino-only authentication of a stampless (head_n=0) entry — both
+    blind spots of the stamp itself.
+
     Returns ``(bytes, base, same_incarnation, ok)``: ``ok`` is True
-    when the candidate verified as the end incarnation AND the read is
-    trustworthy — either the full planned length, or an empty range
-    after the same-incarnation lift (a successful no-op, NOT a
-    failure: discarding the verdict there made the caller run the
-    salvage leg against the very incarnation being read, re-emitting
-    its tail as duplicates — r13 review find). A verified-but-SHORT
-    read returns ok=False so the caller falls through to the
-    sibling."""
+    when the candidate verified AND the read is trustworthy — either
+    the full planned length (any length for ``stop=None``), or an
+    empty range after the same-incarnation lift (a successful no-op,
+    NOT a failure: discarding the verdict there made the caller run
+    the salvage leg against the very incarnation being read,
+    re-emitting its tail as duplicates — r13 review find). A missing
+    or unreadable file, a failed identity check, or a verified-but-
+    SHORT planned read returns no bytes and ok=False, so the caller
+    falls through to the next leg."""
     try:
         with open(path, "rb") as fh:
             st = os.fstat(fh.fileno())
@@ -228,29 +191,20 @@ def _verified_range(
                 and hashlib.md5(first[:sib_head_n]).hexdigest() == sib_head
             )
             base = max(pos, sib_pos) if same else pos
-            want = stop - base - 1
-            if want <= 0:
+            want = None if stop is None else stop - base - 1
+            if want is not None and want <= 0:
                 return b"", base, same, True
             fh.seek(base)
             buf = fh.read(want)
-            if len(buf) != want:
+            if want is not None and len(buf) != want:
                 return b"", base, same, False
-            # post-read identity re-check (r13 ADVICE #2): the head was
-            # hashed BEFORE the body read on this handle; a same-inode
-            # copytruncate that regrows past ``stop`` in that window
-            # would have handed us full-length NEW-incarnation bytes
-            # with ok=True (the inode leg cannot catch it — an open
-            # handle's inode never changes; only the CONTENT under it
-            # did). Re-reading the same prefix AFTER the body read
-            # closes the window: under pure append the first bytes of
-            # a file never change, so any difference proves the
-            # incarnation was replaced mid-read and the body bytes are
-            # untrustworthy — reject (caller falls to the sibling leg
-            # or drops the range: the documented failure mode stays
-            # "lost range", never wrong bytes). The residual is a
-            # replacement whose first ``len(first)`` bytes are
-            # byte-identical — the same identical-preamble blind spot
-            # the stamp itself has always had.
+            # post-read identity re-check: under pure append the first
+            # bytes of a file never change, so any difference proves
+            # the incarnation was replaced mid-read and the body bytes
+            # are untrustworthy — reject (the documented failure mode
+            # stays "lost range", never wrong bytes). The inode leg
+            # cannot catch this: an open handle's inode never changes,
+            # only the CONTENT under it did.
             if need:
                 fh.seek(0)
                 if fh.read(len(first)) != first:
@@ -301,14 +255,12 @@ def _plan_file_range(path: str, s: dict, e: dict) -> dict | None:
                 reset = _head_hash(path, s_head_n) != s.get("head", "")
             except OSError:
                 reset = True
-    salv = bool(reset and s_head_n)
     pos0 = 0 if reset else int(s.get("pos", 0))
     stop = int(e["pos"])
     if not reset and stop <= pos0:
         return None  # no growth past the committed boundary
-    # (a reset always carries the salvage leg: reset is only decided
-    # when s_head_n is nonzero, so salv == reset — a salvage-less
-    # reset with stop == 0 cannot occur)
+    # a reset always carries the salvage leg: reset is only decided
+    # when s_head_n is nonzero, so the sib_* stamp below is real
     return {
         "path": path,
         "pos": pos0,
@@ -316,10 +268,9 @@ def _plan_file_range(path: str, s: dict, e: dict) -> dict | None:
         "head": e.get("head", ""),
         "head_n": int(e["head_n"]),
         "ino": e_ino,
-        "reset": reset,
         # salvage leg (reset only): the OLD incarnation stamp verifies
         # <path>.1 really is our file
-        "salv": salv,
+        "reset": reset,
         "sib_pos": int(s.get("pos", 0)),
         "sib_head": s.get("head", ""),
         "sib_head_n": s_head_n,
@@ -343,7 +294,8 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
     duplicate).
 
     Then, for a genuine reset, best-effort salvage of the START
-    incarnation's unread tail from ``<path>.1`` (complete-but-unread
+    incarnation's unread tail from ``<path>.1``, read to EOF by the
+    same :func:`_verified_range` with ``stop=None`` (complete-but-unread
     records left with the rotated copy; if the sibling is gone —
     compressed, dateext, shipped away — that loss window is real and
     unavoidable from a single-path tailer).
@@ -352,11 +304,12 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
     every leg fails, both buffers are empty and the range's records
     are lost — the documented residual window, never wrong bytes."""
     p = v["path"]
+    reset = bool(v.get("reset"))
+    sib_head = v.get("sib_head", "") if reset else ""
+    sib_head_n = int(v.get("sib_head_n", 0)) if reset else 0
+    sib_pos = int(v.get("sib_pos", 0))
     live_buf, live_base, same = b"", int(v["pos"]), False
     if int(v["stop"]) - int(v["pos"]) > 1:
-        sh = v.get("sib_head", "") if v.get("salv") else ""
-        sn = int(v.get("sib_head_n", 0)) if v.get("salv") else 0
-        sp = int(v.get("sib_pos", 0)) if v.get("salv") else 0
         # the same-incarnation guard applies ONLY to the sibling
         # candidate: whenever a reset was planned, the live path is
         # provably NOT the start incarnation (appends never change a
@@ -365,13 +318,11 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
         # there is an identical-preamble false positive that would
         # skip a genuine rename-rotation's salvage and re-read the
         # new incarnation at the old offsets.
-        for cand, ino, sib_ok in ((p, 0, False), (p + ".1", int(v.get("ino", 0)), True)):
+        sib = (sib_head, sib_head_n, sib_pos)
+        for cand, ino, start in ((p, 0, ("", 0, 0)), (p + ".1", int(v.get("ino", 0)), sib)):
             buf, base, c_same, ok = _verified_range(
                 cand, v["head"], int(v["head_n"]), int(v["pos"]),
-                int(v["stop"]), ino,
-                sh if sib_ok else "",
-                sn if sib_ok else 0,
-                sp if sib_ok else 0,
+                int(v["stop"]), ino, *start,
             )
             if ok:
                 # accept the candidate even when the lifted range is
@@ -381,16 +332,12 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
                 # just verified would duplicate its tail)
                 live_buf, live_base, same = buf, base, c_same
                 break
-    sib_buf, sib_base = b"", int(v.get("sib_pos", 0))
-    if v.get("salv") and not same:
-        sib_buf = _read_verified_tail(
-            p + ".1",
-            v.get("sib_head", ""),
-            int(v.get("sib_head_n", 0)),
-            sib_base,
-            int(v.get("sib_ino", 0)),
-        )
-    return sib_buf, sib_base, live_buf, live_base, same
+    sib_buf = b""
+    if reset and not same:
+        sib_buf = _verified_range(
+            p + ".1", sib_head, sib_head_n, sib_pos, None, int(v.get("sib_ino", 0))
+        )[0]
+    return sib_buf, sib_pos, live_buf, live_base, same
 
 
 def _head_hash(path: str, n: int) -> str:
@@ -641,7 +588,6 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
     grain is the file)."""
 
     def __init__(self, options: dict):
-        self.options = options
         self.path = options.get("path")
         if not self.path:
             raise ValueError("slowlog multi-tail stream requires a path")
@@ -797,7 +743,7 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
     # makes whole directories disappear from the glob; dropping their
     # entries would re-ingest EVERY file from byte 0 on remount. With
     # the default 5 s follow trigger, 720 misses ≈ one hour of outage
-    # survived with positions intact. Override: .option("missLimit", n)
+    # survived with positions intact.
     _MISS_LIMIT = 720
 
     def latestOffset(self) -> dict:
@@ -821,7 +767,7 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
             if p in files:
                 continue
             miss = int(e.get("miss", 0)) + 1
-            if miss <= self._miss_limit:
+            if miss <= self._MISS_LIMIT:
                 clean = {k: x for k, x in e.items() if k != "miss"}
                 files[p] = clean
                 known2[p] = dict(clean, miss=miss)
@@ -830,10 +776,6 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         for gone in set(self._stat_cache) - set(files):
             self._stat_cache.pop(gone, None)
         return {"files": files}
-
-    @property
-    def _miss_limit(self) -> int:
-        return int(self.options.get("misslimit", self._MISS_LIMIT))
 
     def partitions(self, start: dict, end: dict):
         sf = start.get("files", {})
@@ -848,7 +790,7 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         # restored checkpoint's offsets still carry the OLD spec's file
         # set; entries outside this shard can never plan a range here
         # again, so re-priming them would park frozen dead weight in
-        # the carry ledger for missLimit polls. Filter the ledger —
+        # the carry ledger for _MISS_LIMIT polls. Filter the ledger —
         # NOT the planning loop below, which must replay the committed
         # batch byte-identically whatever spec wrote it.
         for p, e in ef.items():
@@ -913,12 +855,6 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
             # stamp is the fresher (larger head_n) of the two either way
             inc = f"{v.get('head', '')}@{int(v.get('ino', 0))}"
             yield from _parse_bytes(live_buf, live_base, (v["path"], inc))
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets carry everything; nothing to clean up
-
-    def stop(self) -> None:
-        pass
 
 
 class SlowlogMultiTailDataSource(DataSource):

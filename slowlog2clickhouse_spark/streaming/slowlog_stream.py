@@ -618,6 +618,44 @@ def run_pctl_merge_stream(
     q.awaitTermination()
 
 
+def _drain_grow_drain(
+    spark: SparkSession, base: str, path: str, parts: dict
+) -> DataFrame:
+    """The tail ops' deployment dance: write each file's first part,
+    drain a memory-sink tail of ``path`` (a file, directory or glob),
+    append each file's second part plus ``_SENTINEL`` (flushes the
+    last real record; itself stays in-flight and carries no
+    statement), drain again, and class the tailed events.
+    ``parts`` maps file -> (first, second)."""
+    from slowlog2clickhouse_spark.sources.slowlog_datasource import register
+
+    register(spark)
+    for f, (first, _) in parts.items():
+        _os.makedirs(_os.path.dirname(f), exist_ok=True)
+        with open(f, "w") as fh:
+            fh.write(first)
+    name = f"tail_{_os.path.basename(base)}"
+    q = (
+        spark.readStream.format("slowlog_tail_multi")
+        .option("path", path)
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", f"{base}/ckpt")
+        .trigger(processingTime=TAIL_DRAIN_TRIGGER)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        for f, (_, second) in parts.items():
+            with open(f, "a") as fh:
+                fh.write(second + _SENTINEL)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return _tail_classes(spark.table(name))
+
+
 @op(
     "stream_slowlog_tail",
     # the tail reader must deliver EXACTLY the fixture's events across
@@ -637,44 +675,16 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once recovery (tests/test_streaming.py pins
     kill-and-restart equals batch).
 
-    The op reproduces the deployment dance deterministically: write
-    half the fixture, drain, append the rest plus a header-only
-    sentinel (flushes the last real record; itself stays in-flight
-    and carries no statement), drain again — then classes the tailed
-    events. A hash match against the golden IR proves no event was
-    lost, duplicated, or torn across the grow boundary."""
+    The op runs the deployment dance (``_drain_grow_drain``) over the
+    fixture split in half. A hash match against the golden IR proves
+    no event was lost, duplicated, or torn across the grow boundary."""
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
-    register(spark)
     base = f"{_TMP}/slowlog_tail_{_os.getpid()}_{next(_counter)}"
-    _os.makedirs(base, exist_ok=True)
     src = f"{base}/slow.log"
     txt = open(FIXTURE_LOG).read()
     mid = _fixture_cuts(txt, 2)[1]
-    with open(src, "w") as f:
-        f.write(txt[:mid])
-
-    name = f"tailed_{_os.path.basename(base)}"
-    q = (
-        spark.readStream.format("slowlog_tail_multi")
-        .option("path", src)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(processingTime=TAIL_DRAIN_TRIGGER)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        with open(src, "a") as f:
-            f.write(txt[mid:])
-            f.write(_SENTINEL)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _tail_classes(spark.table(name))
+    return _drain_grow_drain(spark, base, src, {src: (txt[:mid], txt[mid:])})
 
 
 @op(
@@ -696,11 +706,9 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     via head-hash incarnation stamps, and rotated-sibling salvage all
     apply PER FILE.
 
-    The op reproduces the fleet dance deterministically: the fixture
-    is split into two "hosts'" logs, each written half-way, drained,
-    then grown to completion plus a header-only sentinel per file
-    (flushes each file's last real record; itself carries no
-    statement). Classes over the union must hash-match the golden IR
+    The op runs the deployment dance (``_drain_grow_drain``) over the
+    fixture split into two "hosts'" logs, each written half-way and
+    then grown to completion. Classes over the union must hash-match the golden IR
     — proving the per-file offsets advanced independently and the
     union re-assembled the corpus exactly.
 
@@ -717,42 +725,19 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection itself (see MULTI_EVENT_SCHEMA), so idempotent sinks
     have a structural key."""
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
-    register(spark)
     base = f"{_TMP}/slowlog_tail_multi_{_os.getpid()}_{next(_counter)}"
-    _os.makedirs(f"{base}/logs", exist_ok=True)
     txt = open(FIXTURE_LOG).read()
-    _, q1, mid, q3, _ = _fixture_cuts(txt, 4)
-    a, b = txt[:mid], txt[mid:]
-    a_mid = q1
-    b_mid = q3 - mid
-    with open(f"{base}/logs/host_a.log", "w") as f:
-        f.write(a[:a_mid])
-    with open(f"{base}/logs/host_b.log", "w") as f:
-        f.write(b[:b_mid])
-
-    name = f"fleet_{_os.path.basename(base)}"
-    q = (
-        spark.readStream.format("slowlog_tail_multi")
-        .option("path", f"{base}/logs")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(processingTime=TAIL_DRAIN_TRIGGER)
-        .start()
+    _, q1, mid, q3, end = _fixture_cuts(txt, 4)
+    return _drain_grow_drain(
+        spark,
+        base,
+        f"{base}/logs",
+        {
+            f"{base}/logs/host_a.log": (txt[:q1], txt[q1:mid]),
+            f"{base}/logs/host_b.log": (txt[mid:q3], txt[q3:end]),
+        },
     )
-    try:
-        q.processAllAvailable()
-        with open(f"{base}/logs/host_a.log", "a") as f:
-            f.write(a[a_mid:] + _SENTINEL)
-        with open(f"{base}/logs/host_b.log", "a") as f:
-            f.write(b[b_mid:] + _SENTINEL)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _tail_classes(spark.table(name))
 
 
 @op(

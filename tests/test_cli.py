@@ -42,6 +42,58 @@ def test_cli_ingest_parquet_equals_library(spark, tmp_path):
     }
 
 
+def test_cli_ingest_survives_out_of_range_values(spark, tmp_path):
+    """Out-of-range values in one record (a `# Time:` of minute 60,
+    month 13 or Feb 30; a `SET timestamp` past year 9999 or past a C
+    long; a Rows_sent past int64) no longer abort `ingest`: each record
+    still lands in its class, and the good records' class rows are the
+    ones a log without the bad records gives."""
+
+    def rec(t, q, rows_sent="1", set_ts=""):
+        return (
+            f"# Time: {t}\n# User@Host: u[u] @ h []  Id: 1\n"
+            f"# Query_time: 0.5  Lock_time: 0.0 Rows_sent: {rows_sent}  Rows_examined: 1\n"
+            f"{set_ts}{q};\n"
+        )
+
+    good = "".join(
+        rec(f"2024-01-01T00:0{i % 3}:{i:02d}.000000Z", f"SELECT * FROM good{i % 2} WHERE id = {i}")
+        for i in range(6)
+    )
+    bad = (
+        rec("2024-01-01T00:60:30", "SELECT * FROM bad_minute")
+        + rec("2024-13-01T00:00:00", "SELECT * FROM bad_month")
+        + rec("2024-02-30T00:00:00", "SELECT * FROM bad_day")
+        + rec("2024-01-01T00:01:00Z", "SELECT * FROM bad_epoch", set_ts="SET timestamp=99999999999999;\n")
+        + rec("2024-01-01T00:01:00Z", "SELECT * FROM bad_long", set_ts=f"SET timestamp={'9' * 30};\n")
+        + rec("2024-01-01T00:02:00Z", "SELECT * FROM bad_rows", rows_sent="9" * 23)
+    )
+    logs = {"good": good, "mixed": good[: len(good) // 2] + bad + good[len(good) // 2 :]}
+    cols = None
+    rows = {}
+    for name, text in logs.items():
+        log = tmp_path / f"{name}.log"
+        log.write_text(text)
+        out = str(tmp_path / f"out_{name}")
+        assert main(["ingest", "--log", str(log), "--out", out]) == 0
+        df = spark.read.parquet(out).drop("period_date", "labels")
+        cols = cols or df.columns
+        rows[name] = {(r["digest"], r["period_start"]): r for r in df.select(cols).collect()}
+
+    by_example = {r["example"]: r for r in rows["mixed"].values()}
+    for t in ("bad_minute", "bad_month", "bad_day"):
+        assert by_example[f"SELECT * FROM {t}"]["period_start"] is None
+    for t in ("bad_epoch", "bad_long"):  # the header's minute, no SET text
+        assert by_example[f"SELECT * FROM {t}"]["period_start"].minute == 1
+    assert by_example["SELECT * FROM bad_rows"]["m_rows_sent_sum"] is None
+    labels = spark.read.parquet(str(tmp_path / "out_mixed")).where(
+        F.col("example") == "SELECT * FROM bad_rows"
+    ).first()["labels"]
+    assert labels == {"Rows_sent": "9" * 23}
+    assert {k: v for k, v in rows["mixed"].items() if k in rows["good"]} == rows["good"]
+    assert len(rows["mixed"]) == len(rows["good"]) + 6
+
+
 def test_cli_ingest_requires_a_sink(capsys):
     rc = main(["ingest", "--log", FIXTURE_LOG])
     assert rc == 2

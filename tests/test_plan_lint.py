@@ -560,3 +560,26 @@ def test_class_battery_has_no_tiebreak_knob():
     read-order tie-break anywhere in the package."""
     hits = [p for p, text in _package_sources().items() if "example_tiebreak" in text]
     assert not hits, hits
+
+
+def test_tail_reader_has_one_verified_read_and_no_test_only_knob():
+    """The tail reader opens, verifies and reads a file range in one
+    function (`_verified_range`; the salvage read is its stop=None
+    call), and reads no option that only tests set."""
+    for name in ("_read_verified_tail", "misslimit"):
+        hits = [p for p, text in _package_sources().items() if name in text.lower()]
+        assert not hits, (name, hits)
+
+
+def test_digest_has_no_period_option():
+    """`digest` ranks digests summed over every period, so a period
+    option could not change its report."""
+    import argparse
+
+    from slowlog2clickhouse_spark.__main__ import _build_parser
+
+    sub = next(
+        a for a in _build_parser()._actions if isinstance(a, argparse._SubParsersAction)
+    )
+    assert "--period" not in sub.choices["digest"]._option_string_actions
+    assert "--period" in sub.choices["ingest"]._option_string_actions

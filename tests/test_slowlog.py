@@ -99,6 +99,53 @@ class TestParseRecord:
         assert ev["query"] == "SELECT a\nFROM b\nWHERE c = 1"
 
     @pytest.mark.parametrize(
+        "header",
+        ["2024-01-01T00:60:30", "2024-13-01T00:00:00", "2024-02-30T00:00:00"],
+    )
+    def test_out_of_range_time_header_gives_null_ts(self, header):
+        """A `# Time:` value naming no real instant is an event with a
+        NULL ts, not an error that aborts the whole parse stage."""
+        ev = parse_record(
+            f"# Time: {header}\n"
+            "# Query_time: 0.5  Lock_time: 0.0  Rows_sent: 1  Rows_examined: 1\n"
+            "SELECT 1;"
+        )
+        assert ev["ts"] is None
+        assert ev["query"] == "SELECT 1" and ev["query_time"] == pytest.approx(0.5)
+
+    @pytest.mark.parametrize("epoch", ["99999999999999", "9" * 30])
+    def test_out_of_range_set_timestamp_keeps_header_ts(self, epoch):
+        """`SET timestamp=` past year 9999 (ValueError) or past a C long
+        (OverflowError) leaves the header's ts, and the line still does
+        not become query text."""
+        ev = parse_record(
+            "# Time: 2024-01-01T00:09:58Z\n"
+            "# Query_time: 0.5  Lock_time: 0.0  Rows_sent: 1  Rows_examined: 1\n"
+            f"SET timestamp={epoch};\n"
+            "SELECT 1;"
+        )
+        assert ev["ts"].isoformat() == "2024-01-01T00:09:58"
+        assert ev["query"] == "SELECT 1"
+
+    def test_out_of_range_integer_goes_to_extra_metrics(self):
+        """An integer outside int64 cannot ride a LongType column: it
+        stays raw in extra_metrics; the int64 bounds themselves parse."""
+        ev = parse_record(
+            "# Time: 2024-01-01T00:00:01Z\n"
+            "# Query_time: 0.5  Rows_sent: 99999999999999999999999"
+            "  Rows_examined: 9223372036854775807\n"
+            "# Rows_affected: -9223372036854775808  Bytes_sent: 9223372036854775808\n"
+            "SELECT 1;"
+        )
+        assert ev["rows_sent"] is None and ev["bytes_sent"] is None
+        assert ev["rows_examined"] == 2**63 - 1
+        assert ev["rows_affected"] == -(2**63)
+        assert ev["extra_metrics"] == {
+            "Rows_sent": "99999999999999999999999",
+            "Bytes_sent": "9223372036854775808",
+        }
+
+    @pytest.mark.parametrize(
         "log", ["slowlog_small.log", "slowlog_mixed_versions.log"]
     )
     def test_log_key_spellings_hit_the_exact_table(self, log):

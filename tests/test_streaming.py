@@ -1206,7 +1206,7 @@ def test_multi_tail_reshard_contract(spark, tmp_path):
       (b) out-of-shard entries restored from the old checkpoint are
           NOT re-primed into the carry ledger — the next latestOffset
           emits only this shard's slice (no frozen dead weight riding
-          the offset dict for missLimit polls);
+          the offset dict for _MISS_LIMIT polls);
       (c) a file that moved INTO this shard has no offset entry here,
           so it re-ingests from byte 0 — duplicates, never loss — and
           dedup on (source_file, incarnation, record_no) restores
@@ -1845,8 +1845,8 @@ def test_multi_tail_mount_flap_carries_all_offsets(spark, tmp_path):
     assert all("miss" not in e or not e["miss"] for e in off4["files"].values())
 
 
-def test_multi_tail_vanished_file_entry_expires(spark, tmp_path):
-    """A file absent past missLimit consecutive polls ages out of the
+def test_multi_tail_vanished_file_entry_expires(spark, tmp_path, monkeypatch):
+    """A file absent past _MISS_LIMIT consecutive polls ages out of the
     offset dict (bounded state for a churning fleet)."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
         SlowlogMultiTailStreamReader,
@@ -1857,9 +1857,8 @@ def test_multi_tail_vanished_file_entry_expires(spark, tmp_path):
     a = str(logs / "a.log")
     with open(a, "w") as f:
         f.write(_mk_rec(1) + _TERM)
-    r = SlowlogMultiTailStreamReader(
-        {"path": str(logs / "*.log"), "misslimit": "3"}
-    )
+    monkeypatch.setattr(SlowlogMultiTailStreamReader, "_MISS_LIMIT", 3)
+    r = SlowlogMultiTailStreamReader({"path": str(logs / "*.log")})
     rows, off = _multi_plan(r, r.initialOffset())
     assert _queries(rows) == ["SELECT 1"]
     os.remove(a)
@@ -1902,9 +1901,11 @@ def test_tail_start_at_latest_skips_backlog(spark, tmp_path):
         SlowlogMultiTailStreamReader({"path": src, "startat": "yesterday"})
 
 
-def test_multi_tail_orphan_sibling_stays_excluded_after_expiry(spark, tmp_path):
+def test_multi_tail_orphan_sibling_stays_excluded_after_expiry(
+    spark, tmp_path, monkeypatch
+):
     """Decommissioned host: after the base's carried offset entry ages
-    out (missLimit), its still-present rotated sibling must STAY
+    out (_MISS_LIMIT), its still-present rotated sibling must STAY
     excluded from the fleet — re-ingesting rotation history as a new
     member would be wholesale duplication (r12 third-review find)."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
@@ -1919,14 +1920,13 @@ def test_multi_tail_orphan_sibling_stays_excluded_after_expiry(spark, tmp_path):
     with open(a + ".1", "w") as f:
         f.write(_mk_rec(7) + _TERM)  # rotation history from before
 
-    r = SlowlogMultiTailStreamReader(
-        {"path": str(logs / "*"), "misslimit": "2"}
-    )
+    monkeypatch.setattr(SlowlogMultiTailStreamReader, "_MISS_LIMIT", 2)
+    r = SlowlogMultiTailStreamReader({"path": str(logs / "*")})
     rows, off = _multi_plan(r, r.initialOffset())
     assert _queries(rows) == ["SELECT 1"]  # .1 excluded while base live
 
     os.remove(a)  # host decommissioned; history file remains
-    for _ in range(4):  # well past missLimit=2 — entry has aged out
+    for _ in range(4):  # well past _MISS_LIMIT=2 — entry has aged out
         rows_n, off = _multi_plan(r, off)
         assert _queries(rows_n) == [], off
     assert a not in off["files"]  # carried entry expired
@@ -2171,6 +2171,50 @@ def test_multi_tail_stat_fastpath_and_same_size_copytruncate(
     assert _queries(rows3) == ["SELECT 7"]  # reset + re-read, not stale
 
 
+def test_verified_range_salvage_reads_rotated_sibling_to_eof(tmp_path):
+    """The salvage read is ``_verified_range(..., stop=None)``: it reads
+    a rotated ``<path>.1`` from the committed offset to EOF iff one leg
+    of the START stamp matches — the head hash (a copytruncate COPY,
+    new inode) or the inode (the renamed ORIGINAL) — and returns
+    nothing for a sibling that matches neither."""
+    import hashlib
+    import shutil
+
+    from slowlog2clickhouse_spark.sources import slowlog_datasource as ds
+
+    p = str(tmp_path / "slow.log")
+    content = (_mk_rec(1) + _mk_rec(2) + _TERM).encode()
+    with open(p, "wb") as f:
+        f.write(content)
+    head_n = 64
+    head = hashlib.md5(content[:head_n]).hexdigest()
+    pos = len(_mk_rec(1))  # committed boundary: record 1 was emitted
+    ino = os.stat(p).st_ino
+    tail = content[pos:]
+
+    # copytruncate: .1 is a COPY (new inode, same bytes) — head leg
+    shutil.copyfile(p, p + ".1")
+    assert os.stat(p + ".1").st_ino != ino
+    assert ds._verified_range(p + ".1", head, head_n, pos, None, ino) == (
+        tail, pos, False, True,
+    )
+
+    # create/rename: .1 IS our inode — the inode leg alone authenticates
+    # it (a head stamp that does not match is passed to prove it)
+    os.remove(p + ".1")
+    os.rename(p, p + ".1")
+    assert ds._verified_range(p + ".1", "0" * 32, head_n, pos, None, ino)[0] == tail
+
+    # a sibling that matches neither leg (another incarnation's history;
+    # written while our inode is still live, so it cannot reuse it)
+    with open(p + ".other", "wb") as f:
+        f.write((_mk_rec(7, pad=" -- other incarnation") + _TERM).encode())
+    os.replace(p + ".other", p + ".1")
+    assert ds._verified_range(p + ".1", head, head_n, pos, None, ino) == (
+        b"", pos, False, False,
+    )
+
+
 def test_read_planned_range_empty_same_incarnation_skips_salvage(tmp_path):
     """r13 review find: when the end incarnation is located at <path>.1
     and ALSO matches the start stamp with nothing new to read (the
@@ -2200,7 +2244,6 @@ def test_read_planned_range_empty_same_incarnation_skips_salvage(tmp_path):
         "head_n": head_n,
         "ino": 0,
         "reset": True,
-        "salv": True,
         "sib_pos": pos,
         "sib_head": head,
         "sib_head_n": head_n,
@@ -2240,10 +2283,15 @@ def test_single_tail_salvage_only_when_live_leg_unverifiable(
     with open(src, "w") as f:
         f.write(_mk_rec(8) + _TERM)
 
-    # make every live-leg candidate read fail verification, leaving
-    # only the (independently verified) salvage leg
+    # make every live-leg candidate read (a planned stop) fail
+    # verification, leaving only the (independently verified) salvage
+    # read to EOF (stop=None)
     real = ds._verified_range
-    monkeypatch.setattr(ds, "_verified_range", lambda *a, **k: (b"", 0, False, False))
+    monkeypatch.setattr(
+        ds,
+        "_verified_range",
+        lambda *a, **k: (b"", 0, False, False) if a[4] is not None else real(*a, **k),
+    )
     rows2, off2 = _multi_plan(r, off)
     monkeypatch.setattr(ds, "_verified_range", real)
     # salvage only (the terminator flushed rec 2); every row carries
