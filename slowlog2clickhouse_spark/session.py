@@ -43,17 +43,15 @@ _RUNTIME_CONF = {
 def get_session(
     app_name: str = "slowlog2clickhouse_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = local_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config(map=_RUNTIME_CONF)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # embedded Derby (JDBC tests) writes derby.log into user.dir by

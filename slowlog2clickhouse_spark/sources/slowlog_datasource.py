@@ -23,12 +23,15 @@ file) is the better tool — documented trade, same output schema.
 
 Tail reader (streaming): ``slowlog_tail_multi``
 (SlowlogMultiTailStreamReader) follows one growing file, a directory
-or a glob; a plain file path globs to itself. It plans and reads
-through module-level primitives:
+or a glob; a plain file path globs to itself. A file incarnation is
+known by its bytes: the md5 of its first ``head_n`` bytes is the only
+identity a read accepts (appends never change them), while the
+stamp's inode only tells the planner that a create/rename rotation
+happened. It plans and reads through module-level primitives:
 
   * ``_stamp_file``       — a file's offset entry {pos, head, head_n,
-                            ino}: last complete-record boundary + the
-                            two-leg incarnation stamp;
+                            ino}, taken through one open handle: last
+                            complete-record boundary, head hash, inode;
   * ``_plan_file_range``  — given the committed start entry and a fresh
                             end entry, decide truncation/rotation
                             (reset) and produce the planned byte range
@@ -40,10 +43,10 @@ through module-level primitives:
                             best-effort salvage of the start
                             incarnation's unread tail — every read
                             through ONE ``_verified_range``, which
-                            verifies the stamp on the opened handle,
-                            enforces the exact planned length, applies
-                            the same-incarnation guard and re-checks
-                            the stamp after the read.
+                            verifies the head hash on the opened
+                            handle, enforces the exact planned length,
+                            applies the same-incarnation guard and
+                            re-checks the head after the read.
 """
 
 from __future__ import annotations
@@ -51,6 +54,7 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import weakref
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -72,10 +76,9 @@ class SlowlogReader(DataSourceReader):
             raise ValueError("slowlog datasource requires a path")
 
     def partitions(self):
-        if os.path.isdir(self.path):
-            files = sorted(glob.glob(os.path.join(self.path, "*.log")))
-        else:
-            files = sorted(glob.glob(self.path)) or [self.path]
+        files = _log_files(self.path)
+        if not files and not os.path.isdir(self.path):
+            files = [self.path]
         return [InputPartition(f) for f in files]
 
     def read(self, partition: InputPartition):
@@ -83,19 +86,15 @@ class SlowlogReader(DataSourceReader):
             yield from _parse_bytes(fh.read(), 0)
 
 
+def _log_files(path: str) -> list:
+    """The files a slow-log path names, sorted: a directory means its
+    ``*.log`` files, anything else is a glob."""
+    if os.path.isdir(path):
+        path = os.path.join(path, "*.log")
+    return sorted(glob.glob(path))
+
+
 _BOUNDARY = b"\n# Time: "
-
-
-def _file_ino(path: str) -> int:
-    """st_ino, or 0 when unavailable — the second leg of the
-    incarnation stamp. copytruncate keeps the inode (caught by the
-    size/head checks); create/rename rotation changes it, which the
-    head hash alone cannot see when the new incarnation starts with
-    an identical >=64-byte preamble (mysqld's restart banner is)."""
-    try:
-        return os.stat(path).st_ino
-    except OSError:
-        return 0
 
 
 def _verified_range(
@@ -104,29 +103,23 @@ def _verified_range(
     head_n: int,
     pos: int,
     stop: int | None,
-    ino: int = 0,
     sib_head: str = "",
     sib_head_n: int = 0,
     sib_pos: int = 0,
 ) -> tuple[bytes, int, bool, bool]:
     """Read ``[pos, stop-1)`` of ONE candidate file iff it verifies as
-    the incarnation the stamp (head/head_n, ino) names — the one
-    open-verify-read primitive of the tail reader. ``stop=None`` reads
-    to EOF: the salvage read of a rotated sibling, which never grows,
-    so a short read there is the file's true end, not a torn range.
-    Identity holds when either leg matches:
+    the incarnation the stamp names — the one open-verify-read
+    primitive of the tail reader. ``stop=None`` reads to EOF: the
+    salvage read of a rotated sibling, which never grows, so a short
+    read there is the file's true end, not a torn range.
 
-    * md5 of the first ``head_n`` bytes equals ``head`` (the rotated
-      COPY of our incarnation — copytruncate gives it a new inode but
-      identical content), or
-    * ``st_ino`` equals ``ino`` (the renamed ORIGINAL — logrotate
-      create/rename moves our very inode to ``<path>.1``).
-
-    The inode leg is ONLY sound for verifying a rotated SIBLING: the
-    LIVE path keeps its inode across copytruncate while the content
-    changes, so an ino match there would falsely authenticate a new
-    incarnation (r12 second-review find) — live-path callers pass
-    ino=0 and rely on the head hash alone.
+    Identity is the head hash alone: md5 of the first ``head_n``
+    (> 0) bytes must equal ``head``. Appends never change a file's
+    first bytes, and both rotated forms of our incarnation keep them —
+    the copytruncate COPY (new inode, identical content) and the
+    renamed ORIGINAL. An inode number proves nothing here: a new file
+    may reuse a deleted incarnation's inode, and the live path keeps
+    its inode across copytruncate while its content changes.
 
     A planned range (``stop`` given) carries two more guarantees
     (r12 ADVICE):
@@ -147,19 +140,17 @@ def _verified_range(
       — see :func:`_read_planned_range` for why the live path must
       never take this lift.
 
-    Both stats come from ``os.fstat`` on the OPENED handle, not the
-    path — a path-level stat-then-open would let a rotation between
-    the two calls authenticate one file and read another (TOCTOU) —
-    and the identity prefix is re-read AFTER the body read (r13
-    ADVICE #2, r14 third review): a same-inode copytruncate that
-    regrows past the planned stop, or an in-place rewrite of a
-    sibling's inode (``cp new old.1`` over an existing .1 — logrotate
-    copytruncate with rotate=1 produces exactly this), between the
-    head hash and the body read would otherwise hand back
-    new-incarnation bytes under the old stamp. The residual is a
-    replacement byte-identical over the verified prefix, or an
-    ino-only authentication of a stampless (head_n=0) entry — both
-    blind spots of the stamp itself.
+    The hash is taken on the OPENED handle that is then read — a
+    verify-then-open would let a rotation between the two calls
+    authenticate one file and read another (TOCTOU) — and the identity
+    prefix is re-read AFTER the body read (r13 ADVICE #2, r14 third
+    review): a same-inode copytruncate that regrows past the planned
+    stop, or an in-place rewrite of a sibling's inode (``cp new old.1``
+    over an existing .1 — logrotate copytruncate with rotate=1 produces
+    exactly this), between the head hash and the body read would
+    otherwise hand back new-incarnation bytes under the old stamp. The
+    residual is a replacement byte-identical over the verified prefix,
+    the blind spot of the stamp itself.
 
     Returns ``(bytes, base, same_incarnation, ok)``: ``ok`` is True
     when the candidate verified AND the read is trustworthy — either
@@ -173,21 +164,14 @@ def _verified_range(
     falls through to the next leg."""
     try:
         with open(path, "rb") as fh:
-            st = os.fstat(fh.fileno())
-            need = max(head_n if head_n and head else 0, sib_head_n)
-            first = fh.read(min(need, st.st_size)) if need else b""
-            ok = bool(ino) and st.st_ino == ino
-            if not ok and head_n and head:
-                ok = (
-                    len(first) >= head_n
-                    and hashlib.md5(first[:head_n]).hexdigest() == head
-                )
-            if not ok:
+            first = fh.read(max(head_n, sib_head_n))
+            if not (
+                0 < head_n <= len(first)
+                and hashlib.md5(first[:head_n]).hexdigest() == head
+            ):
                 return b"", pos, False, False
-            same = bool(
-                sib_head_n
-                and sib_head
-                and len(first) >= sib_head_n
+            same = (
+                0 < sib_head_n <= len(first)
                 and hashlib.md5(first[:sib_head_n]).hexdigest() == sib_head
             )
             base = max(pos, sib_pos) if same else pos
@@ -202,13 +186,10 @@ def _verified_range(
             # bytes of a file never change, so any difference proves
             # the incarnation was replaced mid-read and the body bytes
             # are untrustworthy — reject (the documented failure mode
-            # stays "lost range", never wrong bytes). The inode leg
-            # cannot catch this: an open handle's inode never changes,
-            # only the CONTENT under it did.
-            if need:
-                fh.seek(0)
-                if fh.read(len(first)) != first:
-                    return b"", pos, False, False
+            # stays "lost range", never wrong bytes)
+            fh.seek(0)
+            if fh.read(len(first)) != first:
+                return b"", pos, False, False
             return buf, base, same, True
     except OSError:
         return b"", pos, False, False
@@ -282,16 +263,13 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
     """Execute one planned range dict (from :func:`_plan_file_range`)
     — the ONE read implementation behind the tail reader.
 
-    Locates the END incarnation first: the live path (verified by head
-    hash alone — copytruncate keeps the inode while replacing content,
-    so an ino match there would falsely authenticate the NEW
-    incarnation), then the once-rotated sibling ``<path>.1`` (either
-    leg — a renamed original keeps our inode). Each candidate read is
-    length-exact (:func:`_verified_range`); a candidate that also
-    matches the START stamp is the same incarnation we already
-    committed ``sib_pos`` bytes of — its read starts there and the
-    salvage leg is skipped (its range IS this read; running it would
-    duplicate).
+    Locates the END incarnation first: the live path, then the
+    once-rotated sibling ``<path>.1``, each verified by the end stamp's
+    head hash. Each candidate read is length-exact
+    (:func:`_verified_range`); a candidate that also matches the START
+    stamp is the same incarnation we already committed ``sib_pos``
+    bytes of — its read starts there and the salvage leg is skipped
+    (its range IS this read; running it would duplicate).
 
     Then, for a genuine reset, best-effort salvage of the START
     incarnation's unread tail from ``<path>.1``, read to EOF by the
@@ -319,10 +297,10 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
         # skip a genuine rename-rotation's salvage and re-read the
         # new incarnation at the old offsets.
         sib = (sib_head, sib_head_n, sib_pos)
-        for cand, ino, start in ((p, 0, ("", 0, 0)), (p + ".1", int(v.get("ino", 0)), sib)):
+        for cand, start in ((p, ()), (p + ".1", sib)):
             buf, base, c_same, ok = _verified_range(
                 cand, v["head"], int(v["head_n"]), int(v["pos"]),
-                int(v["stop"]), ino, *start,
+                int(v["stop"]), *start,
             )
             if ok:
                 # accept the candidate even when the lifted range is
@@ -334,9 +312,7 @@ def _read_planned_range(v: dict) -> tuple[bytes, int, bytes, int, bool]:
                 break
     sib_buf = b""
     if reset and not same:
-        sib_buf = _verified_range(
-            p + ".1", sib_head, sib_head_n, sib_pos, None, int(v.get("sib_ino", 0))
-        )[0]
+        sib_buf = _verified_range(p + ".1", sib_head, sib_head_n, sib_pos, None)[0]
     return sib_buf, sib_pos, live_buf, live_base, same
 
 
@@ -347,44 +323,45 @@ def _head_hash(path: str, n: int) -> str:
         return hashlib.md5(fh.read(n)).hexdigest()
 
 
-def _last_boundary(path: str, size: int) -> int:
-    """Byte index of the LAST ``\\n# Time: `` in ``path[:size]``, or -1.
-    Backward block scan from EOF with boundary-length overlap — O(tail
-    block), not O(file): a long-running tail must not re-scan the whole
-    multi-GB log every trigger just to find the newest record header."""
+def _last_boundary(fh, size: int) -> int:
+    """Byte index of the LAST ``\\n# Time: `` in the open file ``fh``'s
+    first ``size`` bytes, or -1. Backward block scan from EOF with
+    boundary-length overlap — O(tail block), not O(file): a long-running
+    tail must not re-scan the whole multi-GB log every trigger just to
+    find the newest record header."""
     blk = 1 << 16
     ov = len(_BOUNDARY) - 1
     end = size
-    with open(path, "rb") as fh:
-        while end > 0:
-            lo = max(0, end - blk)
-            fh.seek(lo)
-            buf = fh.read(min(end - lo + ov, size - lo))
-            i = buf.rfind(_BOUNDARY)
-            if i >= 0:
-                return lo + i
-            end = lo
+    while end > 0:
+        lo = max(0, end - blk)
+        fh.seek(lo)
+        buf = fh.read(min(end - lo + ov, size - lo))
+        i = buf.rfind(_BOUNDARY)
+        if i >= 0:
+            return lo + i
+        end = lo
     return -1
 
 
 def _stamp_file(path: str, head_bytes: int = 64) -> dict | None:
     """One file's offset entry {pos, head, head_n, ino} — pos is the
-    byte after the last complete-record boundary, head/head_n/ino the
-    incarnation stamp. The WHOLE body is guarded: a rotation or
-    removal between the stat and the opens returns None instead of
-    crashing the caller."""
+    byte after the last complete-record boundary, head/head_n the
+    incarnation's identity (md5 of its first head_n bytes), ino the
+    inode the planner compares to see a create/rename rotation. All
+    four come from ONE open handle (size and inode by ``os.fstat``),
+    so a rename between the reads cannot pair one file's head with
+    another's inode or boundary. A missing or unreadable file returns
+    None instead of crashing the caller."""
     try:
-        size = os.path.getsize(path)
-        b = _last_boundary(path, size)
-        head_n = min(head_bytes, size)
-        return {
-            "pos": b + 1 if b >= 0 else 0,
-            "head": _head_hash(path, head_n),
-            "head_n": head_n,
-            "ino": _file_ino(path),
-        }
+        with open(path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            head_n = min(head_bytes, st.st_size)
+            head = hashlib.md5(fh.read(head_n)).hexdigest() if head_n else ""
+            b = _last_boundary(fh, st.st_size)
     except OSError:
         return None
+    pos = b + 1 if b >= 0 else 0
+    return {"pos": pos, "head": head, "head_n": head_n, "ino": st.st_ino}
 
 
 def _stamp_file_cached(path: str, cache: dict, head_bytes: int = 64) -> dict | None:
@@ -404,13 +381,14 @@ def _stamp_file_cached(path: str, cache: dict, head_bytes: int = 64) -> dict | N
 
     The post-scan stat does double duty: a stamp is CACHED only when
     the triple held across the scan, and a stamp the scan-window
-    evidence shows may be TORN is not returned at all — _stamp_file is
-    not atomic (getsize, then the tail scan, then the head hash), so a
-    rotation landing between its reads can weld the OLD incarnation's
-    pos onto the NEW incarnation's head, and committing that torn
-    stamp would plan a mid-record byte range that parses a garbage
-    fragment (r13 review find; the pre-r13 direct _stamp_file callers
-    had this window too).
+    evidence shows may be TORN is not returned at all. _stamp_file
+    reads through one handle, so a rename cannot weld two files into
+    one stamp; but an in-place rewrite (copytruncate) changes the
+    content under that very handle between the head hash and the tail
+    scan, welding the OLD incarnation's head onto the NEW
+    incarnation's pos, and committing that torn stamp would plan a
+    mid-record byte range that parses a garbage fragment (r13 review
+    find).
 
     Torn-vs-append discrimination (r13 third-review find — rejecting
     on ANY triple change starved continuously-appended hot files into
@@ -483,7 +461,7 @@ def _stamp_file_cached(path: str, cache: dict, head_bytes: int = 64) -> dict | N
 # (r13 VERDICT #5): it carries "<md5 head stamp>@<inode>" of the
 # incarnation the record's bytes were read from (the live leg's end
 # stamp, or the salvage leg's start stamp) — BOTH legs of the
-# planner's identity check, derived purely from the planned range
+# planner's rotation check, derived purely from the planned range
 # dict, i.e. from committed offsets, so it is deterministic under
 # replay. (source_file, incarnation, record_no) is unique across
 # incarnations exactly as strongly as rotation detection itself: the
@@ -702,11 +680,7 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         return int(h[:8], 16) % n == i
 
     def _files(self) -> list:
-        if os.path.isdir(self.path):
-            files = glob.glob(os.path.join(self.path, "*.log"))
-        else:
-            files = glob.glob(self.path)
-        files = [p for p in files if self._in_shard(p)]
+        files = [p for p in _log_files(self.path) if self._in_shard(p)]
         # known bases count too: during a rename-to-recreate gap the
         # live slow.log is briefly absent while slow.log.1 exists —
         # the carried offset entry proves the base is a tailed file,
@@ -715,20 +689,17 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         # entry itself expires (decommissioned host)
         self._seen_bases.update(files)
         self._seen_bases.update(self._known)
-        live = set(files) | set(self._known) | self._seen_bases
         # never tail a rotated sibling as its own fleet member: with a
         # broad glob (--log '/var/log/mysql/*') slow.log.1 would be
         # ingested wholesale (mostly bytes already emitted while it
         # was slow.log) AND re-read by slow.log's salvage leg. A file
         # whose ".N"-stripped base is itself being tailed is that
         # base's rotation history, not a mysqld of its own.
-        out = []
-        for p in files:
-            base = self._rot_base(p)
-            if base != p and base in live:
-                continue
-            out.append(p)
-        return sorted(out)
+        return [
+            p
+            for p in files
+            if (base := self._rot_base(p)) == p or base not in self._seen_bases
+        ]
 
     def initialOffset(self) -> dict:
         if self.start_at == "latest":
@@ -837,7 +808,7 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         v = partition.value
         sib_buf, sib_base, live_buf, live_base, _same = _read_planned_range(v)
         # the emitted incarnation stamp carries BOTH legs of the
-        # planner's identity check — head hash AND inode (r14 second
+        # planner's rotation check — head hash AND inode (r14 second
         # review: a rename rotation under an identical >=64-byte
         # preamble is detected by the INODE leg, so a head-only stamp
         # would be strictly weaker than rotation detection and collide
@@ -881,14 +852,14 @@ class SlowlogDataSource(DataSource):
         return SlowlogReader(self.options)
 
 
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+
+
 def register(spark) -> None:
-    """Idempotent registration of the 'slowlog' and
-    'slowlog_tail_multi' formats."""
-    try:
-        spark.dataSource.register(SlowlogDataSource)
-    except Exception:
-        pass  # already registered in this session
-    try:
-        spark.dataSource.register(SlowlogMultiTailDataSource)
-    except Exception:
-        pass
+    """Register the 'slowlog' and 'slowlog_tail_multi' formats once per
+    session: Spark replaces a re-registered format and logs a WARN."""
+    if spark in _REGISTERED:
+        return
+    spark.dataSource.register(SlowlogDataSource)
+    spark.dataSource.register(SlowlogMultiTailDataSource)
+    _REGISTERED.add(spark)

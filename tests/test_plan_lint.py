@@ -571,6 +571,23 @@ def test_tail_reader_has_one_verified_read_and_no_test_only_knob():
         assert not hits, (name, hits)
 
 
+def test_tail_reads_verify_content_only_and_register_never_swallows():
+    """A tail read accepts a file by its head hash alone: `_verified_range`
+    takes no inode, and `_file_ino` (a path stat that could pair one
+    file's head with another's inode) is gone. `register` tracks the
+    sessions it registered instead of swallowing an exception."""
+    import ast
+    import inspect
+
+    from slowlog2clickhouse_spark.sources import slowlog_datasource as ds
+
+    params = inspect.signature(ds._verified_range).parameters
+    assert not [n for n in params if "ino" in n], list(params)
+    assert not hasattr(ds, "_file_ino")
+    tree = ast.parse(inspect.getsource(ds.register))
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.ExceptHandler)]
+
+
 def test_digest_has_no_period_option():
     """`digest` ranks digests summed over every period, so a period
     option could not change its report."""

@@ -1640,10 +1640,10 @@ def test_multi_tail_follow_append_mode_emits_closed_windows(spark, tmp_path):
 def test_single_tail_detects_rename_rotation_identical_preamble(spark, tmp_path):
     """logrotate create/rename with an identical >=64-byte preamble on
     ONE tailed file: the head hash alone cannot see the rotation (both
-    incarnations hash equal), the inode leg must — and the salvage leg
-    must accept the renamed ORIGINAL at <path>.1 via its inode even
-    though the new live file carries the same head bytes (r12
-    code-review find)."""
+    incarnations hash equal), the planner's inode comparison must — and
+    the salvage leg must accept the renamed ORIGINAL at <path>.1 by its
+    head hash even though the new live file carries the same head
+    bytes (r12 code-review find)."""
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
         SlowlogMultiTailStreamReader,
     )
@@ -1671,7 +1671,7 @@ def test_single_tail_detects_rename_rotation_identical_preamble(spark, tmp_path)
 
     rows2, off2 = _multi_plan(r, off)
     qs = _queries(rows2)
-    # salvage recovered rec 2 from the renamed original (inode leg),
+    # salvage recovered rec 2 from the renamed original (head hash),
     # and the new incarnation was read from byte 0 (reset, not stale)
     assert qs == ["SELECT 2", f"SELECT 8{pad}", f"SELECT 9{pad}"], qs
     assert off2["files"][src]["ino"] != e["ino"]
@@ -2173,10 +2173,10 @@ def test_multi_tail_stat_fastpath_and_same_size_copytruncate(
 
 def test_verified_range_salvage_reads_rotated_sibling_to_eof(tmp_path):
     """The salvage read is ``_verified_range(..., stop=None)``: it reads
-    a rotated ``<path>.1`` from the committed offset to EOF iff one leg
-    of the START stamp matches — the head hash (a copytruncate COPY,
-    new inode) or the inode (the renamed ORIGINAL) — and returns
-    nothing for a sibling that matches neither."""
+    a rotated ``<path>.1`` from the committed offset to EOF iff the
+    START stamp's head hash matches — a copytruncate COPY (new inode)
+    or the renamed ORIGINAL (our inode) — and returns nothing for a
+    sibling whose head differs, whatever its inode."""
     import hashlib
     import shutil
 
@@ -2195,24 +2195,58 @@ def test_verified_range_salvage_reads_rotated_sibling_to_eof(tmp_path):
     # copytruncate: .1 is a COPY (new inode, same bytes) — head leg
     shutil.copyfile(p, p + ".1")
     assert os.stat(p + ".1").st_ino != ino
-    assert ds._verified_range(p + ".1", head, head_n, pos, None, ino) == (
+    assert ds._verified_range(p + ".1", head, head_n, pos, None) == (
         tail, pos, False, True,
     )
 
-    # create/rename: .1 IS our inode — the inode leg alone authenticates
-    # it (a head stamp that does not match is passed to prove it)
+    # create/rename: .1 IS our inode and verifies by its head; a wrong
+    # head on that same inode verifies nothing
     os.remove(p + ".1")
     os.rename(p, p + ".1")
-    assert ds._verified_range(p + ".1", "0" * 32, head_n, pos, None, ino)[0] == tail
+    assert os.stat(p + ".1").st_ino == ino
+    assert ds._verified_range(p + ".1", head, head_n, pos, None) == (
+        tail, pos, False, True,
+    )
+    assert ds._verified_range(p + ".1", "0" * 32, head_n, pos, None) == (
+        b"", pos, False, False,
+    )
 
-    # a sibling that matches neither leg (another incarnation's history;
-    # written while our inode is still live, so it cannot reuse it)
+    # a sibling with another head (another incarnation's history)
     with open(p + ".other", "wb") as f:
         f.write((_mk_rec(7, pad=" -- other incarnation") + _TERM).encode())
     os.replace(p + ".other", p + ".1")
-    assert ds._verified_range(p + ".1", head, head_n, pos, None, ino) == (
+    assert ds._verified_range(p + ".1", head, head_n, pos, None) == (
         b"", pos, False, False,
     )
+
+
+def test_read_planned_range_rejects_sibling_reusing_gone_inode(tmp_path):
+    """A ``<path>.1`` whose inode number equals the start stamp's ``ino``
+    but whose content is another file's (the stamped incarnation was
+    deleted and its inode number reused) is not the start incarnation:
+    the salvage leg returns nothing, and the live records are still
+    read."""
+    import hashlib
+
+    from slowlog2clickhouse_spark.sources import slowlog_datasource as ds
+
+    p = str(tmp_path / "slow.log")
+    gone = (_mk_rec(1) + _mk_rec(2) + _TERM).encode()
+    with open(p + ".1", "wb") as f:
+        f.write((_mk_rec(7, pad=" -- another incarnation") + _TERM).encode())
+    with open(p, "wb") as f:
+        f.write((_mk_rec(8) + _TERM).encode())
+    start = {
+        "pos": len(_mk_rec(1)),
+        "head": hashlib.md5(gone[:64]).hexdigest(),
+        "head_n": 64,
+        "ino": os.stat(p + ".1").st_ino,
+    }
+    plan = ds._plan_file_range(p, start, ds._stamp_file(p))
+    assert plan["reset"] and plan["sib_ino"] == start["ino"]
+    sib_buf, _, live_buf, _, same = ds._read_planned_range(plan)
+    assert sib_buf == b"" and not same
+    assert live_buf == _mk_rec(8).encode()[:-1]  # up to the boundary's \n
 
 
 def test_read_planned_range_empty_same_incarnation_skips_salvage(tmp_path):
